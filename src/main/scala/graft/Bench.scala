@@ -11,9 +11,10 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *    benchmark p1/o1-style queries as near-empty scans;
   *  - one throwaway warmup query absorbs JVM/Spark startup (~8 s) so the
   *    first measured query isn't charged for it;
-  *  - the shared ALS model is pre-trained BEFORE timing and reported as its
-  *    own "_als_fit" entry, so m4/m5/m6 measure recommend/transform only —
-  *    fit variance (±10 s) polluted the query table in rounds 2-3;
+  *  - every artifact a selected query declares in `Q.needs` (the shared ALS
+  *    model, the IVF index, ...) is built BEFORE timing and reported as its
+  *    own entry ("_als_fit", ...), so m4/m5/m6 measure recommend/transform
+  *    only — fit variance (±10 s) polluted the query table in rounds 2-3;
   *  - the whole suite runs SPARK_GRAFT_BENCH_RUNS times (default 2) and each
   *    query reports its MIN across runs — per-query noise at sf0.1 ran up to
   *    3.7x in round 3, and min-of-n is the standard variance-proofing;
@@ -133,80 +134,23 @@ object Bench {
         StandardCopyOption.ATOMIC_MOVE)
     }
 
-    // Model/index artifacts are built once, outside the query loops (the
-    // TrieMap caches make every later m4/m5/m6/e4 construction reuse them):
-    // ALS fit -> "_als_fit", IVF quantizer build -> "_ivf_build". Skipped
-    // when the name filter selects no query that uses them — a filtered
-    // 0.6 s query must not pay ~9 s of pretraining.
-    val needsAls = selected.exists(Set("m4_als_recommend", "m5_als_rmse",
-      "m6_item_similarity", "m11_rec_coverage", "m12_fold_in"))
-    val needsIvf = selected.exists(Set("e4_ann_ivf", "e6_semdedup", "e8_ivfpq",
-      "e9_ivf_maintain", "e13_probe_sweep"))
-    val needsQc = selected.contains("c5_quality_classifier")
-    val needsBuckets = selected.contains("b1_bucketed_join")
-    if (needsAls) {
-      record("_als_fit",
-        try timed(graft.queries.MlQueries.pretrainAls(spark, sfDir))
-        catch { case _: Throwable => -1.0 })
-      flush(partial = true)
-    }
-    if (needsIvf) {
-      record("_ivf_build",
-        try timed(graft.queries.PipelineQueries.pretrainIvf(spark, sfDir))
-        catch { case _: Throwable => -1.0 })
-      flush(partial = true)
-    }
-    if (selected.exists(Set("e7_pq_adc", "e8_ivfpq"))) {
-      record("_pq_build",
-        try timed(graft.queries.PipelineQueries.pretrainPq(spark, sfDir))
-        catch { case _: Throwable => -1.0 })
-      flush(partial = true)
-    }
-    if (needsQc) {
-      record("_qc_fit",
-        try timed(graft.queries.MlQueries.pretrainQuality(spark, sfDir))
-        catch { case _: Throwable => -1.0 })
-      flush(partial = true)
-    }
-    if (needsBuckets) {
-      record("_bucket_write",
-        try timed(graft.queries.IoQueries.prepareBuckets(spark, sfDir))
-        catch { case _: Throwable => -1.0 })
-      flush(partial = true)
-    }
-    // st1/st2/st5/st6/st7/st8's landing fixtures (events staged as files, once
-    // and twice, plus st6's sentinel): test plumbing, not operator work —
-    // staged outside query timing so the queries measure the stream drain
-    // itself, and gated per fixture so a filtered run stages only what it
-    // reads. st3/st4 stage inside their own timing ON PURPOSE: their
-    // landings-then-drains sequences ARE the query.
-    val stageSingle = selected.exists(Set(
-      "st1_stream_hourly", "st5_stream_join", "st6_stream_session",
-      "st7_stream_ewma"))
-    val stageDoubled = selected.contains("st2_stream_dedup")
-    val stageSentinel = selected.contains("st6_stream_session")
-    val stageTokens = selected.contains("st8_stream_heavy")
-    if (stageSingle || stageDoubled || stageTokens) {
-      record("_stream_stage",
-        try timed(graft.queries.StreamingQueries
-          .pretrainStage(spark, sfDir, stageSingle, stageDoubled,
-            stageSentinel, stageTokens))
-        catch { case _: Throwable => -1.0 })
-      flush(partial = true)
-    }
-    // Shared co-occurrence edge table: built once, queries then time the
-    // graph algorithm instead of re-deriving the edge list. The trigger
-    // set must list EVERY coocEdgesWeighted consumer (r9 advice: a
-    // filtered run of just g7/t20 was paying the edge build inside query
-    // timing).
-    if (selected.exists(Set("g3_triangle_count", "g4_label_prop", "g5_bfs",
-        "g6_weighted_sssp", "g7_random_walks", "t20_skipgram_pairs",
-        "g8_kcore", "g10_degree_histogram", "g11_modularity",
-        "g12_common_neighbors", "g13_assortativity"))) {
-      record("_edges_build",
-        try timed(graft.queries.GraphTemporalQueries.pretrainEdges(spark, sfDir))
-        catch { case _: Throwable => -1.0 })
-      flush(partial = true)
+    // Artifacts (model fits, index builds, landed fixtures, bucket and
+    // edge tables) are built once, outside the query loops, and reported
+    // as their own spans, so the queries that read them time only their
+    // own work. The spans come from the selected queries' `Q.needs`, so a
+    // filtered 0.6 s query never pays ~9 s of unrelated pretraining, and a
+    // new consumer of an artifact is timed right without editing Bench.
+    val needed = SparkEntry.registry.filter(q => selected(q.name))
+      .flatMap(_.needs).distinct
+    for (span <- Seq("_als_fit", "_ivf_build", "_pq_build", "_qc_fit",
+        "_bucket_write", "_stream_stage", "_edges_build")) {
+      val builds = Artifact.all.filter(a => a.span == span && needed.contains(a))
+      if (builds.nonEmpty) {
+        record(span,
+          try timed(builds.foreach(_.get(spark, sfDir)))
+          catch { case _: Throwable => -1.0 })
+        flush(partial = true)
+      }
     }
     // K=64 BPE training point (VERDICT r8 #6): t16 registers K=6, which
     // hides the per-merge driver-round-trip cost the BpeTrainer.
@@ -315,11 +259,6 @@ object Bench {
       .find(_.length <= 1880).getOrElse(topLine)
     println(json)
     flush(partial = false)
-    graft.queries.MlQueries.clearCaches()
-    graft.queries.PipelineQueries.clearCaches()
-    graft.queries.IoQueries.clearCaches()
-    graft.queries.GraphTemporalQueries.clearCaches()
-    graft.queries.StreamingQueries.clearCaches()
     Scratch.sweep(spark)
     spark.stop()
   }

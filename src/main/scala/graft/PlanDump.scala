@@ -33,11 +33,6 @@ object PlanDump {
       Files.writeString(Paths.get(s"$outDir/${n}_$suffix.txt"), txt)
       println(s"[plandump] $outDir/${n}_$suffix.txt (${txt.length} chars)")
     }
-    graft.queries.MlQueries.clearCaches()
-    graft.queries.PipelineQueries.clearCaches()
-    graft.queries.IoQueries.clearCaches()
-    graft.queries.GraphTemporalQueries.clearCaches()
-    graft.queries.StreamingQueries.clearCaches()
     Scratch.sweep(spark)
     spark.stop()
   }

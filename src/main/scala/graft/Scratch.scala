@@ -67,12 +67,12 @@ object Scratch {
     * materialize-vs-recompute crossover at scale (VERDICT r14 #2); results
     * are identical by construction, asserted by CutDifferentialSpec.
     *
-    * Writes are memoized per resolved path for the life of the JVM
-    * (ADVICE r15): queries that SHARE a cut name (u1/u2/u10/u11's change
-    * batch, u10/u11's second delta log) used to re-overwrite the files on
-    * every construction, so a DataFrame handle from an EARLIER
-    * construction held a stale file listing and executing it after the
-    * rewrite threw FileNotFoundException. With the memo, the first
+    * Writes are memoized per (session, scratch root, cut name) through
+    * [[Artifact]] (ADVICE r15): queries that SHARE a cut name (u1/u2/u10/
+    * u11's change batch, u10/u11's second delta log) used to re-overwrite
+    * the files on every construction, so a DataFrame handle from an
+    * EARLIER construction held a stale file listing and executing it after
+    * the rewrite threw FileNotFoundException. With the memo, the first
     * construction writes and every later one reuses the identical files —
     * sound because a cut name embeds [[key]] of its source dir and the
     * derivation is deterministic, so same name ⟹ same rows. [[sweep]]
@@ -80,21 +80,17 @@ object Scratch {
     * experiment's per-measurement hook, so a timed materialized run
     * always pays its write) clear it.
     */
-  private val written =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+  private val written = Artifact.cuts()
 
   /** Forget which cut paths were written this session — next [[cut]] per
     * name pays the write again. For harness code that deletes scratch or
     * deliberately re-times the write barrier; never needed by queries.
     */
-  def resetCuts(): Unit = written.clear()
+  def resetCuts(): Unit = written.reset()
 
-  /** Invalidation hooks run by [[sweep]] alongside [[resetCuts]]: any
-    * module that memoizes scratch PATHS (StreamingQueries' landing-fixture
-    * stage) registers a clear here, so no path memo anywhere can outlive
-    * the files it names — the round-10 t20 failure class. Registration is
-    * idempotent by construction (each module registers once at object
-    * init).
+  /** Invalidation hooks run by [[sweep]] alongside [[resetCuts]]: every
+    * [[Artifact]] registers its reset here, so no memo anywhere can
+    * outlive the files it names — the round-10 t20 failure class.
     */
   private val sweepHooks =
     new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
@@ -103,11 +99,9 @@ object Scratch {
   def cut(s: SparkSession, name: String)(df: DataFrame): DataFrame =
     if (s.conf.get(CutKey, "true").toBoolean) {
       val p = dir(s, name)
-      // computeIfAbsent so a concurrent second constructor (harness/Par)
-      // blocks until the write finishes instead of reading a partial dir
-      written.computeIfAbsent(p, _ => {
-        df.write.mode("overwrite").parquet(p); java.lang.Boolean.TRUE
-      })
+      // a concurrent second constructor (harness/Par) blocks until the
+      // write finishes instead of reading a partial dir
+      written.once(s, name)(df.write.mode("overwrite").parquet(p))
       s.read.parquet(p)
     } else df
 
@@ -127,9 +121,7 @@ object Scratch {
   def cutEager(s: SparkSession, name: String)(mk: => DataFrame): DataFrame =
     if (s.conf.get(CutKey, "true").toBoolean) {
       val p = dir(s, name)
-      written.computeIfAbsent(p, _ => {
-        mk.write.mode("overwrite").parquet(p); java.lang.Boolean.TRUE
-      })
+      written.once(s, name)(mk.write.mode("overwrite").parquet(p))
       s.read.parquet(p)
     } else mk
 

@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
-  private def registry: Seq[Q] =
+  private[graft] def registry: Seq[Q] =
     graft.queries.RelationalQueries.all ++
       graft.queries.PipelineQueries.all ++
       graft.queries.IoQueries.all ++

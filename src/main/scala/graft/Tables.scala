@@ -85,8 +85,14 @@ object Tables {
   * every floating aggregate is rounded at the decimal grain of its true value
   * so the Spark and DuckDB doubles are bit-identical despite different
   * summation order.
+  *
+  * `needs` lists the [[Artifact]]s the query reads — a fitted model, an
+  * index, a landed fixture. Bench builds and times them as their own
+  * spans before timing any query, and QueriesSmokeSpec checks that a
+  * construction builds no artifact it does not declare.
   */
 final case class Q(
     name: String,
     run: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
+    oracle: Option[String],
+    needs: Seq[Artifact[_]] = Nil)

@@ -63,11 +63,6 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    graft.queries.MlQueries.clearCaches()
-    graft.queries.PipelineQueries.clearCaches()
-    graft.queries.IoQueries.clearCaches()
-    graft.queries.GraphTemporalQueries.clearCaches()
-    graft.queries.StreamingQueries.clearCaches()
     Scratch.sweep(spark)
     spark.stop()
     val nDumped = dumped.result().size

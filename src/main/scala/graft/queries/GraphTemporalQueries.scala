@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{Q, Tables}
+import graft.{Artifact, Q, Tables}
 
 /** Round-8 surface growth: graph analytics beyond PageRank/components
   * (triangle counting), temporal/CDC modeling (SCD2 history build),
@@ -31,46 +31,38 @@ object GraphTemporalQueries {
     * fact table (at 100 TB the pairs self-join is the dominant cost and
     * amortizing it across the analytics family is the whole point).
     * Bench reports the build as its own "_edges_build" entry, so g3/g4/g5
-    * measure the graph algorithm, not the shared extraction.
+    * measure the graph algorithm, not the shared extraction. The table
+    * keeps the co-occurrence count `c` (the edge weight g6 prices hops
+    * with); the unweighted consumers project it away at read, so the
+    * parquet scan prunes the column — one build serves both the topology
+    * family (g3/g4/g5) and the weighted family (g6).
     */
-  private val edgeCache = scala.collection.mutable.Map.empty[String, String]
-  /** The persisted artifact keeps the co-occurrence count `c` (the edge
-    * weight g6 prices hops with); the unweighted consumers project it away
-    * at read, so the parquet scan prunes the column — one build serves
-    * both the topology family (g3/g4/g5) and the weighted family (g6).
-    */
-  private def coocEdgesWeighted(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val key = s"${s.hashCode}|$d"
-    val path = synchronized {
-      if (edgeCache.size >= 4 && !edgeCache.contains(key)) edgeCache.clear()
-      edgeCache.getOrElseUpdate(key, {
-        val pairs = lineitem(s, d)
-          .select(col("l_orderkey"), col("l_partkey")).distinct()
-        val e = pairs.as("x")
-          .join(pairs.as("y"),
-            col("x.l_orderkey") === col("y.l_orderkey")
-              && col("x.l_partkey") < col("y.l_partkey"))
-          .groupBy(col("x.l_partkey").as("u"), col("y.l_partkey").as("v"))
-          .agg(count(lit(1)).as("c"))
-          .filter(col("c") >= 2)
-        val p = graft.Scratch.dir(s, "cooc_edges")
-        e.write.mode("overwrite").parquet(p)
-        p
-      })
-    }
-    s.read.parquet(path)
+  private val coocEdgeTable = Artifact("_edges_build") { (s, d) =>
+    val pairs = lineitem(s, d)
+      .select(col("l_orderkey"), col("l_partkey")).distinct()
+    val e = pairs.as("x")
+      .join(pairs.as("y"),
+        col("x.l_orderkey") === col("y.l_orderkey")
+          && col("x.l_partkey") < col("y.l_partkey"))
+      .groupBy(col("x.l_partkey").as("u"), col("y.l_partkey").as("v"))
+      .agg(count(lit(1)).as("c"))
+      .filter(col("c") >= 2)
+    val p = graft.Scratch.dir(s, s"cooc_edges_${graft.Scratch.key(d)}")
+    e.write.mode("overwrite").parquet(p)
+    p
   }
+  private def coocEdgesWeighted(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(coocEdgeTable.get(s, d))
   private def coocEdges(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     coocEdgesWeighted(s, d).select(col("u"), col("v"))
 
-  /** Bench hook: build (and cache) the shared edge table outside query
-    * timing — "_edges_build", same contract as _ivf_build/_als_fit.
-    */
   def pretrainEdges(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
     coocEdges(s, d); ()
   }
+
+  def clearCaches(): Unit = coocEdgeTable.reset()
 
   /** Three rounds of synchronous LPA over the shared co-occurrence graph
     * (g4's operator, shared with g11's modularity rollup): every node
@@ -118,8 +110,6 @@ object GraphTemporalQueries {
       labels
     }
 
-  def clearCaches(): Unit = synchronized { edgeCache.clear() }
-
   val all: Seq[Q] = Seq(
 
     // G3: triangle counting over the part co-occurrence graph (parts
@@ -161,7 +151,8 @@ object GraphTemporalQueries {
              |  SELECT a AS p_partkey FROM tri
              |  UNION ALL SELECT b FROM tri
              |  UNION ALL SELECT c FROM tri)
-             |GROUP BY 1 ORDER BY n_tri DESC, p_partkey LIMIT 100""".stripMargin)),
+             |GROUP BY 1 ORDER BY n_tri DESC, p_partkey LIMIT 100""".stripMargin),
+      needs = Seq(coocEdgeTable)),
 
     // G8: k-core decomposition (fixed k=2) by iterative peel — the graph
     // curation primitive behind "keep the densely-linked subweb"
@@ -244,7 +235,8 @@ object GraphTemporalQueries {
            |FROM a8 LEFT JOIN df ON a8.n = df.n
            |CROSS JOIN cp CROSS JOIN cc
            |ORDER BY p_partkey""".stripMargin
-      }),
+      },
+      needs = Seq(coocEdgeTable)),
 
     // G9: HITS hubs & authorities over the bipartite customer->supplier
     // interaction graph — the link-analysis twin of g2's PageRank, and
@@ -403,7 +395,8 @@ object GraphTemporalQueries {
              |  da.deg * db.deg AS pref_attach
              |FROM ne JOIN deg da ON ne.a = da.node
              |JOIN deg db ON ne.b = db.node
-             |ORDER BY n_cn DESC, pref_attach DESC, a, b LIMIT 100""".stripMargin)),
+             |ORDER BY n_cn DESC, pref_attach DESC, a, b LIMIT 100""".stripMargin),
+      needs = Seq(coocEdgeTable)),
 
     // G13: degree assortativity over the co-occurrence graph — Newman's
     // "do hubs link to hubs?" coefficient, the structural diagnostic
@@ -487,7 +480,8 @@ object GraphTemporalQueries {
              |  CAST((rnum // tr) * (rnum // tr) * 1000000
              |    // nullif((rden // tr) * (rden // tr), 0) AS BIGINT)
              |    AS r2_x1e6
-             |FROM scaled""".stripMargin)),
+             |FROM scaled""".stripMargin),
+      needs = Seq(coocEdgeTable)),
 
     // G10: degree-distribution histogram over the co-occurrence graph —
     // the first diagnostic a graph pipeline runs before choosing
@@ -532,7 +526,8 @@ object GraphTemporalQueries {
              |  FROM deg GROUP BY 1)
              |SELECT bucket, n_nodes, min_deg, max_deg, sum_deg,
              |  n_nodes * 10000 // n_nodes_total AS share_x1e4
-             |FROM b CROSS JOIN tot ORDER BY bucket""".stripMargin)),
+             |FROM b CROSS JOIN tot ORDER BY bucket""".stripMargin),
+      needs = Seq(coocEdgeTable)),
 
     // A23: Benford first-digit audit — the forensic data-quality check a
     // warehouse runs over a monetary fact column (fabricated or
@@ -1017,7 +1012,8 @@ object GraphTemporalQueries {
              |      ORDER BY count(*) DESC, l.label) AS rn
              |  FROM nb JOIN l2 l ON nb.nbr = l.node GROUP BY nb.node, l.label)
              |  WHERE rn = 1)
-             |SELECT node, label FROM l3 ORDER BY node""".stripMargin)),
+             |SELECT node, label FROM l3 ORDER BY node""".stripMargin),
+      needs = Seq(coocEdgeTable)),
 
     // G11: modularity of the LPA communities — the quality score that
     // tells you whether g4's labels MEAN anything (Newman-Girvan Q: how
@@ -1111,7 +1107,8 @@ object GraphTemporalQueries {
              |    - c.d_sum * c.d_sum * 1000000 // (4 * mm.m * mm.m)
              |    AS contrib_x1e6
              |FROM comm c LEFT JOIN ein USING (label) CROSS JOIN mm
-             |ORDER BY label""".stripMargin)),
+             |ORDER BY label""".stripMargin),
+      needs = Seq(coocEdgeTable)),
 
     // W11: per-key EWMA (exponentially weighted moving average) — the
     // recurrence class (y_t = a*x_t + (1-a)*y_{t-1}) that window
@@ -1402,7 +1399,8 @@ object GraphTemporalQueries {
              |  UNION ALL
              |  SELECT nb.node, d.dist + 1 FROM nb JOIN d2 d ON nb.nbr = d.node)
              |  GROUP BY 1)
-             |SELECT node, dist FROM d3 ORDER BY node""".stripMargin)),
+             |SELECT node, dist FROM d3 ORDER BY node""".stripMargin),
+      needs = Seq(coocEdgeTable)),
 
     // G16: harmonic centrality (bounded-hop) — the centrality face g2's
     // PageRank and g9's HITS don't cover: C(s) = Σ_{v≠s} 1/d(s,v),
@@ -1476,7 +1474,8 @@ object GraphTemporalQueries {
              |SELECT seed, CAST(count(*) AS BIGINT) AS n_reached,
              |  CAST(sum(1000000 // dist) AS BIGINT) AS harmonic_x1e6
              |FROM d3 WHERE dist > 0
-             |GROUP BY seed ORDER BY seed""".stripMargin)),
+             |GROUP BY seed ORDER BY seed""".stripMargin),
+      needs = Seq(coocEdgeTable)),
 
     // G6: bounded-hop WEIGHTED shortest path (distributed Bellman-Ford) —
     // g5's BFS with a cost model: edge weight = 1000 div co-occurrence
@@ -1543,7 +1542,8 @@ object GraphTemporalQueries {
              |  UNION ALL
              |  SELECT nb.node, d.dist + nb.w FROM nb JOIN d2 d ON nb.nbr = d.node)
              |  GROUP BY 1)
-             |SELECT node, dist FROM d3 ORDER BY node""".stripMargin)),
+             |SELECT node, dist FROM d3 ORDER BY node""".stripMargin),
+      needs = Seq(coocEdgeTable)),
 
     // F1: funnel analysis — ORDERED multi-step conversion: for each user
     // the first "view", the first "click" strictly AFTER that view, and
@@ -1719,7 +1719,8 @@ object GraphTemporalQueries {
            |${stepSql(3, "w2")}
            |SELECT walk_id, cur AS end_node, path FROM w3
            |ORDER BY walk_id""".stripMargin
-      }),
+      },
+      needs = Seq(coocEdgeTable)),
 
     // F5: RFM segmentation — the classic warehouse customer model
     // (recency / frequency / monetary quartiles, segment code "RFM"):
@@ -1850,7 +1851,8 @@ object GraphTemporalQueries {
            |SELECT center, context, CAST(count(*) AS BIGINT) AS n
            |FROM sg GROUP BY center, context
            |ORDER BY center, context""".stripMargin
-      }),
+      },
+      needs = Seq(coocEdgeTable)),
 
     // F4: first-order Markov transition matrix over event types — the
     // sequence model behind next-action prediction and funnel-leak
@@ -2877,7 +2879,8 @@ object GraphTemporalQueries {
              |    AS lcc_x1e6
              |FROM deg LEFT JOIN tri ON deg.node = tri.node
              |WHERE deg >= 2
-             |ORDER BY deg DESC, deg.node LIMIT 100""".stripMargin)),
+             |ORDER BY deg DESC, deg.node LIMIT 100""".stripMargin),
+      needs = Seq(coocEdgeTable)),
 
     // G15: link prediction scores — g12 surfaces candidate non-edges by
     // raw common-neighbor count; this ranks them by the NORMALIZED
@@ -2946,7 +2949,8 @@ object GraphTemporalQueries {
              |FROM ne JOIN deg da ON ne.a = da.node
              |JOIN deg db ON ne.b = db.node
              |ORDER BY jaccard_x1e6 DESC, n_cn DESC, a, b
-             |LIMIT 100""".stripMargin)),
+             |LIMIT 100""".stripMargin),
+      needs = Seq(coocEdgeTable)),
 
     // W17: Bollinger-band outlier flags — the rolling complement of
     // a16's global z-score and w16's single cut: each hour's revenue is

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.{Q, Tables}
+import graft.{Artifact, Q, Tables}
 
 /** Source/sink operators as registered round-trip queries (SURVEY.md §2.1
   * S2/S5/S6/S7, §2.6 O7) plus the small §2 rows that need their own
@@ -22,8 +22,8 @@ object IoQueries {
     graft.Scratch.dir(s, name)
 
   /** Bucketed tables are LAYOUT, not query work: written once per corpus
-    * snapshot, then every join on the key is exchange-free — the same
-    * artifact contract as the ALS/IVF caches (fit once, reuse). The table
+    * snapshot, then every join on the key is exchange-free — an
+    * [[Artifact]] like the ALS model and the IVF index. The table
     * names carry the sf-dir hash so two corpora in one session never
     * collide, AND the owning pid (VERDICT r15 #1 / r16 #1): the catalog is
     * per-JVM but the `spark.sql.warehouse.dir` DIRECTORY is shared, and
@@ -34,32 +34,25 @@ object IoQueries {
     * discipline Scratch applies to /tmp roots; writeBucketed reaps
     * dead-pid leftovers so repeated runs can't accumulate.
     */
-  private val bucketReady =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-
-  private[graft] def bucketTables(s: org.apache.spark.sql.SparkSession,
-      d: String): (String, String) =
-    bucketReady.getOrElseUpdate(s"${s.hashCode}|$d", {
-      val suffix = (d.hashCode.toLong & 0xffffffffL).toString +
-        "_p" + ProcessHandle.current().pid()
-      val (lt, ot) = (s"q_b_lineitem_$suffix", s"q_b_orders_$suffix")
-      graft.operators.Bucketing.writeBucketed(
-        lineitem(s, d).select(col("l_orderkey"), col("l_extendedprice")),
-        lt, "l_orderkey", 8)
-      graft.operators.Bucketing.writeBucketed(
-        orders(s, d).select(col("o_orderkey").as("l_orderkey"),
-          col("o_orderpriority")),
-        ot, "l_orderkey", 8)
-      (lt, ot)
-    })
-
-  /** Bench pretrain hook — see "_als_fit"/"_ivf_build". */
-  def prepareBuckets(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    bucketTables(s, d); ()
+  private val bucketTables = Artifact("_bucket_write") { (s, d) =>
+    val suffix = (d.hashCode.toLong & 0xffffffffL).toString +
+      "_p" + ProcessHandle.current().pid()
+    val (lt, ot) = (s"q_b_lineitem_$suffix", s"q_b_orders_$suffix")
+    graft.operators.Bucketing.writeBucketed(
+      lineitem(s, d).select(col("l_orderkey"), col("l_extendedprice")),
+      lt, "l_orderkey", 8)
+    graft.operators.Bucketing.writeBucketed(
+      orders(s, d).select(col("o_orderkey").as("l_orderkey"),
+        col("o_orderpriority")),
+      ot, "l_orderkey", 8)
+    (lt, ot)
   }
 
-  /** Harness teardown hook (see MlQueries.clearCaches). */
-  def clearCaches(): Unit = bucketReady.clear()
+  def prepareBuckets(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
+    bucketTables.get(s, d); ()
+  }
+
+  def clearCaches(): Unit = bucketTables.reset()
 
   val all: Seq[Q] = Seq(
 
@@ -265,7 +258,7 @@ object IoQueries {
     // lineitem⨝orders shuffle into a bucket-local read.
     Q("b1_bucketed_join",
       (s, d) => {
-        val (lt, ot) = bucketTables(s, d)
+        val (lt, ot) = bucketTables.get(s, d)
         graft.operators.Bucketing
           .colocatedJoin(s, lt, ot, "l_orderkey")
           .groupBy(col("o_orderpriority"))
@@ -275,7 +268,8 @@ object IoQueries {
       Some("""SELECT o_orderpriority, count(*) AS n,
              |  round(sum(l_extendedprice), 2) AS sv
              |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-             |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
+             |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+      needs = Seq(bucketTables)),
 
     // P9: the expr()/selectExpr SQL-text entry point (learning_curve.py:65
     // is `expr('collect_list(track_idx) as tracks')`) — the whole query is

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Q, Tables}
+import graft.{Artifact, Q, Tables}
 import graft.eval.RankingEval
 import graft.model.{AlsConfig, AlsTrainer}
 import graft.prep.Indexing
@@ -17,44 +17,18 @@ import graft.prep.Indexing
 object MlQueries {
   import Tables._
 
-  /** m4 and m5 evaluate the SAME trained model (recommend vs transform).
-    * A fitted model is an artifact, not a query: train once per (session,
-    * sf dir) and reuse — exactly what a model registry does in production.
-    * Bounded (VERDICT r4 #7): a long-lived session otherwise accumulates
-    * one ALSModel per (session, sfDir); past the cap the cache resets —
-    * the rare extra refit is cheaper than unbounded model retention.
-    */
-  private val MaxCachedModels = 4
-  private val alsCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.ml.recommendation.ALSModel]
-
-  /** Drop every cached model — harness teardown (Bench/Verify) calls this
-    * so repeated in-process runs never pin stale models.
-    */
-  def clearCaches(): Unit = { alsCache.clear(); qcCache.clear() }
-
-  /** The c5 distilled quality model — same artifact contract as alsCache:
-    * fit once per (session, sf dir), every execution scores with the
-    * cached weights (scoring is map-side; only the fit is snapshot work).
-    */
-  private val qcCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.ml.classification.LogisticRegressionModel]
-
   private def featuredDocs(s: org.apache.spark.sql.SparkSession, d: String) =
     graft.pipeline.QualityClassifier.featurize(Tables.tokenizedDocs(s, d))
 
-  private def qcModel(s: org.apache.spark.sql.SparkSession, d: String) = {
-    if (qcCache.size >= MaxCachedModels
-        && !qcCache.contains(s"${s.hashCode}|$d")) qcCache.clear()
-    qcCache.getOrElseUpdate(s"${s.hashCode}|$d",
-      graft.pipeline.QualityClassifier.fit(featuredDocs(s, d)))
-  }
-
-  /** Force the c5 model into the cache — Bench reports the fit as its own
-    * "_qc_fit" entry so c5 measures map-side scoring only.
+  /** The c5 distilled quality model — fit once per (session, sf dir),
+    * every execution scores with the cached weights (scoring is map-side;
+    * only the fit is snapshot work). Bench reports the fit as "_qc_fit".
     */
+  private val qc = Artifact("_qc_fit")((s, d) =>
+    graft.pipeline.QualityClassifier.fit(featuredDocs(s, d)))
+
   def pretrainQuality(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    qcModel(s, d); ()
+    qc.get(s, d); ()
   }
 
   private[graft] def ratingsOf(s: org.apache.spark.sql.SparkSession, d: String) =
@@ -66,22 +40,21 @@ object MlQueries {
   private[graft] val alsCfg = AlsConfig(rank = 8, regParam = 0.1, alpha = 10.0,
     maxIter = 5, userBlocks = 8, itemBlocks = 8)
 
-  private[graft] def alsModel(s: org.apache.spark.sql.SparkSession, d: String) = {
-    if (alsCache.size >= MaxCachedModels
-        && !alsCache.contains(s"${s.hashCode}|$d")) alsCache.clear()
-    alsCache.getOrElseUpdate(s"${s.hashCode}|$d",
-      AlsTrainer.fit(ratingsOf(s, d), alsCfg))
+  /** m4/m5/m6/m11/m12 evaluate the SAME trained model (recommend,
+    * transform, similarity, ...). A fitted model is an artifact, not a
+    * query: trained once per (session, sf dir) and reused — exactly what a
+    * model registry does in production. Bench fits it BEFORE timing and
+    * reports "_als_fit", so model training (±10 s variance at sf0.1) is
+    * never charged to whichever query happens to run first.
+    */
+  private[graft] val als = Artifact("_als_fit")((s, d) =>
+    AlsTrainer.fit(ratingsOf(s, d), alsCfg))
+
+  def pretrainAls(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
+    als.get(s, d); ()
   }
 
-  /** Force the shared m4/m5/m6 model into the cache. Bench calls this
-    * BEFORE timing starts and reports the fit as its own "_als_fit" entry,
-    * so m4/m5/m6 measure recommend/transform/similarity only — model
-    * training time (±10 s variance at sf0.1) must never be charged to
-    * whichever query happens to run first.
-    */
-  def pretrainAls(s: org.apache.spark.sql.SparkSession, d: String): Unit = {
-    alsModel(s, d); ()
-  }
+  def clearCaches(): Unit = { als.reset(); qc.reset() }
 
   val all: Seq[Q] = Seq(
 
@@ -221,7 +194,7 @@ object MlQueries {
     // the driver run deterministic.
     Q("m4_als_recommend",
       (s, d) => {
-        val model = alsModel(s, d)
+        val model = als.get(s, d)
         val users = ratingsOf(s, d).select(col("user_idx")).distinct()
           .filter(col("user_idx") < 10)
         AlsTrainer.recommendLists(model, users, 5)
@@ -229,7 +202,8 @@ object MlQueries {
             array_join(col("pred").cast("array<string>"), ",").as("pred"))
           .orderBy("user_idx")
       },
-      None),
+      None,
+      needs = Seq(als)),
 
     // M4/A10: ALSModel.transform scores on held-out pairs + RMSE — the
     // reference's RegressionEvaluator step (one_train.py:56-58). Rows-only
@@ -237,7 +211,7 @@ object MlQueries {
     // is oracled via a10_rmse.
     Q("m5_als_rmse",
       (s, d) => {
-        val model = alsModel(s, d)
+        val model = als.get(s, d)
         val rmse = RankingEval.rmse(AlsTrainer.scores(model, ratingsOf(s, d)),
           "count", "prediction")
         val spark = s
@@ -248,7 +222,8 @@ object MlQueries {
           else BigDecimal(rmse).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble
         Seq(Tuple1(r2)).toDF("rmse_2dp")
       },
-      None),
+      None,
+      needs = Seq(als)),
 
     // Item-item similarity from the ALS item-factor matrix — "related
     // items", the factor-geometry analysis the reference explores with
@@ -259,7 +234,7 @@ object MlQueries {
     Q("m6_item_similarity",
       (s, d) => {
         import graft.functions.VectorFunctions._
-        val model = alsModel(s, d)
+        val model = als.get(s, d)
         val items = model.itemFactors
           .select(col("id").cast("long").as("item"),
             col("features").cast("array<double>").as("v"))
@@ -276,7 +251,8 @@ object MlQueries {
           .filter(col("rn") <= 3)
           .orderBy("q_item", "rn")
       },
-      None),
+      None,
+      needs = Seq(als)),
 
     // M7 (and the machinery shared with M8/M9): a 1-D rank sweep through
     // graft.harness.Sweeps — the reference's driver-loop hyperparameter
@@ -367,7 +343,7 @@ object MlQueries {
       None),
 
     // C5: distilled quality classifier APPLIED — the fit is a cached
-    // artifact (qcCache; "_qc_fit" in Bench); what this query times is the
+    // artifact (`qc`; "_qc_fit" in Bench); what this query times is the
     // 100 TB-shaped part, scoring every document with broadcast weights
     // (no shuffle until the 10-row calibration rollup). Output is the
     // decile calibration table: per predicted-probability decile, document
@@ -379,7 +355,7 @@ object MlQueries {
     Q("c5_quality_classifier",
       (s, d) => {
         val scored = graft.pipeline.QualityClassifier
-          .score(qcModel(s, d), featuredDocs(s, d))
+          .score(qc.get(s, d), featuredDocs(s, d))
         scored
           .groupBy(least(floor(col("p_keep") * 10), lit(9)).cast("long")
             .as("decile"))
@@ -388,7 +364,8 @@ object MlQueries {
             round(avg(col("p_keep")) * 1000).cast("long").as("mean_p_x1000"))
           .orderBy("decile")
       },
-      None),
+      None,
+      needs = Seq(qc)),
 
     // M11: recommendation COVERAGE and NOVELTY — the beyond-accuracy
     // audit a recsys ships beside MAP/NDCG (m2/m3): what fraction of the
@@ -404,7 +381,7 @@ object MlQueries {
     // (model output); AlsSpec holds the structural laws.
     Q("m11_rec_coverage",
       (s, d) => {
-        val model = alsModel(s, d)
+        val model = als.get(s, d)
         val ratings = ratingsOf(s, d)
         val users = ratings.select(col("user_idx")).distinct()
         val recs = AlsTrainer.recommendLists(model, users, 5)
@@ -427,7 +404,8 @@ object MlQueries {
             expr("n_distinct_items * 10000 div catalog").as("coverage_x1e4"),
             expr("scls * 1000 div n_pairs").as("mean_novelty_x1000"))
       },
-      None),
+      None,
+      needs = Seq(als)),
 
     // M12: implicit-ALS FOLD-IN serving (model/FoldIn) — factors for
     // users who arrived AFTER training, from the frozen item factors:
@@ -445,7 +423,7 @@ object MlQueries {
     // small folded side — no refit, no full-table shuffle.
     Q("m12_fold_in",
       (s, d) => {
-        val model = alsModel(s, d)
+        val model = als.get(s, d)
         val orig = ratingsOf(s, d).filter(col("user_idx") < 20)
         val newbies = orig.select(
           (col("user_idx") + 100000).cast("int").as("user_idx"),
@@ -478,7 +456,8 @@ object MlQueries {
               .cast("long").as("overlap3"))
           .orderBy("user_idx")
       },
-      None),
+      None,
+      needs = Seq(als)),
 
     // M13: popularity-baseline recommender + hit-rate eval — the sanity
     // anchor every recsys eval needs before trusting a model's number

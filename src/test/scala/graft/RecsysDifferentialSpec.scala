@@ -48,7 +48,7 @@ class RecsysDifferentialSpec extends SparkSpec {
     s
   }
 
-  private lazy val model = MlQueries.alsModel(spark, sfDir)
+  private lazy val model = MlQueries.als.get(spark, sfDir)
 
   private lazy val itemFactors: Map[Long, Array[Double]] =
     model.itemFactors.collect()

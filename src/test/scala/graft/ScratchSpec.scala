@@ -128,6 +128,19 @@ class ScratchSpec extends SparkSpec {
     }
   }
 
+  test("sweep invalidates every artifact memo, so consumers rebuild " +
+      "instead of reading deleted files") {
+    // the round-10 t20 class: a memo that outlives a sweep hands the next
+    // consumer a path whose files are gone
+    spark.conf.unset(Scratch.ConfKey)
+    graft.queries.GraphTemporalQueries.pretrainEdges(spark, sfDir)
+    Scratch.sweep(spark)
+    SparkEntry.queries("g3_triangle_count")(spark, sfDir).collect()
+    graft.queries.PipelineQueries.pretrainIvf(spark, sfDir)
+    Scratch.sweep(spark)
+    SparkEntry.queries("e4_ann_ivf")(spark, sfDir).collect()
+  }
+
   test("an IO round-trip query lands in the configured scratch dir") {
     val alt = "/root/repo/target/test-tmp/scratch-redirect"
     spark.conf.set(Scratch.ConfKey, alt)
