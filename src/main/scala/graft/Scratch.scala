@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Scratch-directory resolution for queries that materialize intermediates
@@ -143,24 +144,24 @@ object Scratch {
     * SIBLING per-pid roots whose owning process no longer exists (a
     * killed JVM never reaches its own sweep). Refuses roots whose leaf
     * isn't graft_qtmp-shaped — a misconfigured conf must not turn
-    * teardown into `rm -rf` of a shared directory.
+    * teardown into `rm -rf` of a shared directory. Goes through the
+    * Hadoop FileSystem, so an HDFS or object-store root is swept too.
     */
   def sweep(spark: SparkSession): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(); ()
-    }
-    val root = spark.conf.get(ConfKey, Default)
-    val leaf = new java.io.File(root).getName
-    if (leaf.startsWith("graft_qtmp")) {
+    val root = new Path(spark.conf.get(ConfKey, Default))
+    if (root.getName.startsWith("graft_qtmp")) {
       // the files are about to go — no memo may outlive them
       resetCuts()
       sweepHooks.forEach(_.apply())
-      rm(new java.io.File(root))
-      val parent = new java.io.File(root).getParentFile
-      Option(parent.listFiles()).getOrElse(Array.empty).foreach { f =>
-        f.getName match {
-          case n if n.startsWith("graft_qtmp_") && f.isDirectory =>
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.delete(root, true)
+      val parent = root.getParent
+      val siblings =
+        if (parent != null && fs.exists(parent)) fs.listStatus(parent)
+        else Array.empty[FileStatus]
+      siblings.foreach { st =>
+        st.getPath.getName match {
+          case n if n.startsWith("graft_qtmp_") && st.isDirectory =>
             val pid = n.stripPrefix("graft_qtmp_")
             val alive = scala.util.Try(
               ProcessHandle.of(pid.toLong).isPresent).getOrElse(true)
@@ -171,8 +172,9 @@ object Scratch {
             // that are also stale by wall-clock; a live harness run
             // touches its scratch far more often than hourly.
             val staleMs = 60L * 60 * 1000
-            val old = System.currentTimeMillis() - f.lastModified() > staleMs
-            if (!alive && old) rm(f)
+            val old =
+              System.currentTimeMillis() - st.getModificationTime > staleMs
+            if (!alive && old) fs.delete(st.getPath, true)
           case _ => ()
         }
       }

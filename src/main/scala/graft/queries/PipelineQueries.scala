@@ -102,8 +102,9 @@ object PipelineQueries {
 
   /** PQ codebooks: same artifact contract as the IVF quantizer — trained
     * once per (session, sf dir), seeded, reused by every e7 execution;
-    * Bench reports the m=16 concurrent sub-space k-means fits (on the
-    * seeded sufficient sample — see PqIndex.build) as "_pq_build".
+    * Bench reports the m=16 driver-side sub-space k-means fits (on the
+    * seeded sufficient sample — see PqIndex.build) and the single encode
+    * write as "_pq_build".
     * m=16 x k=32 on 64-dim: 4-dim subspaces, 32x compression, measured
     * mean top-10 overlap 5.2/10 on the near-random synthetic embeddings
     * (4x16 scored 1.7 — chance; resolution is the recall knob). Saved and

@@ -42,6 +42,12 @@ object IvfIndex {
 
   /** Train the coarse quantizer and assign every vector to a cell.
     * `emb` must have (vec_id, v: array<double>).
+    *
+    * The fit stays a distributed MLlib k-means|| job, unlike PqIndex's
+    * driver-side codebook fits: it reads the FULL corpus, which is not
+    * bounded, so collecting it to the driver would break the scale
+    * rationale above. PQ can collect because its fit sample is capped at
+    * `fitPointsPerCentroid * k` rows whatever the corpus size.
     */
   def build(emb: DataFrame, nCells: Int, seed: Long = 123L): Model = {
     val withVec = emb.withColumn("fv", array_to_vector(col("v")))

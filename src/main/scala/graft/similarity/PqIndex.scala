@@ -1,7 +1,6 @@
 package graft.similarity
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
+import org.apache.spark.mllib.clustering.GraftKMeans
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -38,8 +37,9 @@ object PqIndex {
 
   /** Persist a built index — IvfIndex.save's model-registry contract:
     * `codes` out of [[build]] is a live encode lineage over the corpus,
-    * so an unloaded model re-plans corpus scans in every consumer; the
-    * loaded form makes ADC search read the (tiny) code table artifact.
+    * so this is where the encode runs — once — and the loaded form makes
+    * ADC search read the (tiny) code table artifact instead of re-running
+    * the m*k argmin projection per query.
     * m/subDim ride a one-row meta table so load needs no side channel.
     */
   def save(model: Model, dir: String): Unit = {
@@ -67,16 +67,21 @@ object PqIndex {
     * have (vec_id, v: array<double>) with a fixed dimension divisible by
     * `m`. Seeded per subspace, so the index is run-to-run deterministic.
     *
-    * Build cost shape (VERDICT r8 #4 — this was 27.8 s as m sequential
-    * full-corpus fits + m full-corpus transform passes + a per-vector
-    * groupBy shuffle):
-    *  - FIT reads a seeded sample, cached once and shared by all m
-    *    k-means fits: a codebook is k centroids, and ~`fitPointsPerCentroid`
-    *    points per centroid estimates them as well as the full corpus —
-    *    the corpus only enters the fit through the (tiny) sufficient
-    *    sample. Corpora at or below the target train on everything
-    *    (fraction 1.0), which keeps PqIndexSpec's zero-distortion law
-    *    exact.
+    * Build cost shape:
+    *  - FIT reads a seeded sample of at most `fitPointsPerCentroid * k`
+    *    rows (6,400 x 64 doubles, ~3.3 MB, at k=32) whatever the corpus
+    *    size: a codebook is k centroids, and ~`fitPointsPerCentroid`
+    *    points per centroid estimates them as well as the full corpus.
+    *    Corpora at or below the target train on everything (fraction
+    *    1.0), which keeps PqIndexSpec's zero-distortion law exact. The
+    *    sample is model-sized, so it is collected ONCE, partition by
+    *    partition, and the m fits run on the driver through
+    *    [[org.apache.spark.mllib.clustering.GraftKMeans]], which mirrors
+    *    MLlib's `KMeans.runAlgorithmWithWeight` (random init) and yields
+    *    the centers `ml.clustering.KMeans` would, bit for bit. As MLlib
+    *    jobs the fits were pure scheduling overhead (~20 jobs per
+    *    sub-space, one per Lloyd round, over a few hundred rows); the
+    *    build now launches the same 4 jobs at any m (PqIndexSpec).
     *  - ENCODE is ONE projection over the corpus: the m*k centroids are
     *    array literals (model-sized — the broadcast-a-codebook rule), and
     *    each vector's m codes are per-subspace argmins computed in a
@@ -84,7 +89,9 @@ object PqIndex {
     *    100 TB the encode is a map-only compressed-write scan, which is
     *    the shape a PQ ingest must have. Ties (measure-zero on continuous
     *    data) break to the LOWEST code via array_position-of-min, so
-    *    encoding is deterministic on any engine.
+    *    encoding is deterministic on any engine. `codes` is returned as
+    *    that live projection: [[save]] writes it exactly once, and ADC
+    *    queries read the saved table through [[load]].
     */
   def build(emb: DataFrame, m: Int = 4, k: Int = 16,
       seed: Long = 123L, fitPointsPerCentroid: Int = 200): Model = {
@@ -94,26 +101,16 @@ object PqIndex {
     val subDim = dim / m
     val total = emb.count()
     val target = fitPointsPerCentroid.toLong * k
-    val fitInput = (if (total <= target) emb
+    val fitParts = (if (total <= target) emb
       else emb.sample(withReplacement = false, target.toDouble / total, seed))
-      .select(col("v")).cache()
-    fitInput.count() // materialize once; all m fits read this cache
-    // the m fits are INDEPENDENT jobs over the same cached sample — run
-    // them concurrently (the scheduler interleaves; sequential fits left
-    // 30/32 cores idle and made _pq_build m * per-job overhead). Seeded
-    // random init: one init pass instead of k-means||'s ~5, deterministic
-    // per (seed, subspace), quality re-verified by PqIndexSpec's floors.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val centers: IndexedSeq[Array[Array[Double]]] =
-      (0 until m).map { si => Future {
-        val sub = fitInput.select(
-          array_to_vector(subvector(col("v"), si, subDim)).as("fv"))
-        new KMeans().setK(k).setSeed(seed + si).setFeaturesCol("fv")
-          .setInitMode("random").fit(sub).clusterCenters.map(_.toArray)
-      } }.map(Await.result(_, Duration.Inf))
-    fitInput.unpersist()
+      .select(col("v")).rdd
+      .mapPartitions(rows =>
+        Iterator(rows.map(_.getSeq[Double](0).toArray).toArray))
+      .collect().toSeq
+    val centers = (0 until m).map { si =>
+      val sub = fitParts.map(_.map(_.slice(si * subDim, (si + 1) * subDim)))
+      GraftKMeans.fit(sub, k, seed + si)
+    }
     import spark.implicits._
     val codebooks = centers.zipWithIndex.flatMap { case (cs, si) =>
       cs.zipWithIndex.map { case (c, code) => (si, code, c.toSeq) }
@@ -124,19 +121,8 @@ object PqIndex {
       val scores = transform(cb, c => sqDist(sub, c))
       (array_position(scores, array_min(scores)) - 1).cast("int")
     }: _*)
-    // MATERIALIZE the encoded corpus: the encode is a compressed WRITE —
-    // the codes table IS the stored index a production PQ ingest leaves
-    // behind. Left lazy, every ADC query re-ran the m*k argmin projection
-    // over the full corpus (e7/e8 doubled to ~4 s each in the r9 bench);
-    // materialized, queries scan the 16-byte/vector parquet instead.
-    val codesPath = graft.Scratch.dir(spark,
-      s"pq_codes_${buildCounter.incrementAndGet()}")
-    emb.select(col("vec_id"), codesCol.as("codes"))
-      .write.mode("overwrite").parquet(codesPath)
-    Model(m, subDim, codebooks, spark.read.parquet(codesPath))
+    Model(m, subDim, codebooks, emb.select(col("vec_id"), codesCol.as("codes")))
   }
-
-  private val buildCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Squared euclidean distance between two double arrays. */
   private def sqDist(a: Column, b: Column): Column =

@@ -43,4 +43,11 @@ object GraftBridge {
         new catalyst.expressions.ExpressionInfo(
           classOf[GraftBridge.type].getName, null, name, usage, ""),
         builder)
+
+  /** Test access: block until every event posted so far has reached the
+    * listeners, so a counting SparkListener reads a settled total (the
+    * bus delivers asynchronously; the wait itself is private[spark]).
+    */
+  def drainListeners(session: SparkSession): Unit =
+    session.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 import graft.similarity.PqIndex
 
@@ -26,10 +28,10 @@ class PqIndexSpec extends SparkSpec {
   test("ADC is exact when every vector is its own centroid (k = corpus)") {
     val s = spark
     import s.implicits._
-    // 8 vectors, k=8 per subspace: k-means places every distinct
-    // subvector on its own centroid -> zero quantization error -> ADC
-    // ranking equals the exact squared-L2 ranking (k > n crashes
-    // Spark's block KMeans, so k matches the corpus size exactly)
+    // 8 vectors, k=8 per subspace: random init takes every row as a
+    // center (k >= n), so every distinct subvector is its own centroid ->
+    // zero quantization error -> ADC ranking equals the exact squared-L2
+    // ranking
     val emb = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .filter($"vec_id" < 8)
@@ -49,6 +51,34 @@ class PqIndexSpec extends SparkSpec {
       .select($"q_id", $"vec_id".as("cand_id"), $"rn")
     assert(adc.exceptAll(exact).isEmpty && exact.exceptAll(adc).isEmpty,
       "zero-distortion ADC diverged from the exact ranking")
+  }
+
+  test("the build launches a fixed number of Spark jobs, whatever m is") {
+    // construct-time job budget: the m codebook fits run on the driver
+    // over one collect of the fit sample, so m=4 and m=16 cost the same
+    // jobs: the dim probe, the corpus count and that collect. Fitting
+    // each sub-space with MLlib cost ~20 jobs per sub-space instead (81
+    // jobs at m=4, 344 at m=16 on this input).
+    val emb = Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    def jobs(m: Int): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val counter = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = {
+          n.incrementAndGet(); ()
+        }
+      }
+      GraftBridge.drainListeners(spark)
+      spark.sparkContext.addSparkListener(counter)
+      try {
+        PqIndex.build(emb, m = m, k = 32)
+        GraftBridge.drainListeners(spark)
+      } finally spark.sparkContext.removeSparkListener(counter)
+      n.get
+    }
+    val (m4, m16) = (jobs(4), jobs(16))
+    assert(m4 == m16, s"job count grew with m: m=4 $m4, m=16 $m16")
+    assert(m16 == 4, s"build launched $m16 jobs")
   }
 
   test("e8 IVF-PQ prunes the scan and keeps recall above the floor") {

@@ -87,6 +87,29 @@ class ScratchSpec extends SparkSpec {
     }
   }
 
+  test("sweep goes through the Hadoop FileSystem: a file: URI root and its " +
+      "stale dead-pid sibling are deleted") {
+    // the shape of an HDFS or object-store scratch prefix: java.io.File
+    // cannot resolve "file:/..." and used to leave the whole tree behind
+    val base = new java.io.File("target/test-tmp/sweep-uri").getAbsoluteFile
+    val mine = new java.io.File(base, "graft_qtmp")
+    val dead = new java.io.File(base, "graft_qtmp_999999999")
+    val keep = new java.io.File(base, "not_scratch")
+    Seq(new java.io.File(mine, "q/part-0"), new java.io.File(dead, "x"), keep)
+      .foreach(_.mkdirs())
+    dead.setLastModified(System.currentTimeMillis() - 2L * 60 * 60 * 1000)
+    spark.conf.set(Scratch.ConfKey, s"file:$mine")
+    try {
+      Scratch.sweep(spark)
+      assert(!mine.exists(), "a file: URI root must be swept")
+      assert(!dead.exists(), "its stale dead-pid sibling must be reaped")
+      assert(keep.exists(), "a non-graft_qtmp sibling must be left alone")
+    } finally {
+      spark.conf.unset(Scratch.ConfKey)
+      Seq(keep, base).foreach(_.delete())
+    }
+  }
+
   test("cut memoizes its write: a second construction under the same name " +
       "reuses the files, so an earlier handle never goes stale") {
     // ADVICE r15: u1/u2/u10/u11 share the uchg_* cut name; before the memo,
