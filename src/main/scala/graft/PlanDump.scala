@@ -11,7 +11,7 @@ import java.nio.file.{Files, Paths}
   *     sbt "runMain graft.PlanDump plans/r17 before d10_fuzzy_pairs f6_markov_stationary"
   *
   * The dump is the AQE-initial formatted plan (the shape the optimizer
-  * requested — the same basis ExchangeCensus budgets), taken at the bench
+  * requested — the same basis Census budgets), taken at the bench
   * scale/core-count so broadcast decisions and scan split counts match
   * what Bench times.
   */

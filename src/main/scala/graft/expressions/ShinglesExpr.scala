@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * anywhere the token array isn't pre-projected to its own column the
   * optimizer re-inlines `split(lower(text))` into the transform lambda and
   * re-tokenizes the document once per shingle (the t6 defect class —
-  * LambdaCseGuardSpec). This expression runs the whole tokenize→slice→join
+  * RegistryAuditSpec). This expression runs the whole tokenize→slice→join
   * loop as tight JVM code, once per row, and cannot be torn apart by
   * CollapseProject.
   *

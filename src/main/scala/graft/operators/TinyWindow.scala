@@ -21,12 +21,12 @@ import org.apache.spark.sql.functions._
   * and (b) leaves WindowExec's warning meaning what it should: an
   * UNAUDITED global window. The key must be constant-VALUED yet not
   * constant-FOLDABLE: Spark 4's EliminateWindowPartitions strips foldable
-  * partition keys right back to the empty (warning) spec — WindowGuardSpec
-  * proved `lit(0)` is erased — so the key is `pmod(hash(anchor), 1)`:
-  * always 0 (hash never yields null), referencing a real column so no
-  * optimizer rule can fold it away.
+  * partition keys right back to the empty (warning) spec — the window
+  * check in RegistryAuditSpec proved `lit(0)` is erased — so the key is
+  * `pmod(hash(anchor), 1)`: always 0 (hash never yields null),
+  * referencing a real column so no optimizer rule can fold it away.
   *
-  * Repo rule (enforced mechanically by WindowGuardSpec over the whole
+  * Repo rule (enforced mechanically by RegistryAuditSpec over the whole
   * registry): bare `Window.orderBy(...)` / `Window.partitionBy()` is
   * banned in main — every global window either goes through GlobalRank
   * (unbounded frames) or names this helper (bounded-by-construction

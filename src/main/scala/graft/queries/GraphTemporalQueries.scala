@@ -253,7 +253,7 @@ object GraphTemporalQueries {
     // scores are <= 1000 after each rescale, so a half-step sum is
     // bounded by 1000 * (edges per node) — 1e9-edge hubs still sit 6
     // orders under Long.Max. The 1-row max frames ride the reviewed
-    // broadcast-scalar idiom (JoinShapeGuardSpec allowlist).
+    // broadcast-scalar idiom (RegistryAuditSpec BNLJ allowlist).
     Q("g9_hits",
       (s, d) => {
         val scratch = graft.Scratch.dir(s, "g9")
@@ -2272,8 +2272,13 @@ object GraphTemporalQueries {
     //     = (0, 2nd-min pks(n1)) when pk1 IS min  for n2 == n1 (cnt>=2)
     // so carrying (pk_min, pk_min2, cnt) per name loses nothing. The
     // name-level band join never does worse than the entity-level one
-    // (distinct <= total rows) and both sides stay broadcastable; the
-    // DP sits in the condition as the SINGLE conjunct
+    // (distinct <= total rows). No join carries a broadcast() hint: every
+    // per-name frame grows with the number of DISTINCT names, which the
+    // data decides (a corpus with billions of distinct names would OOM the
+    // driver on a hint AQE cannot demote), so static and AQE size-based
+    // selection pick broadcast vs shuffle per input — broadcast at the
+    // fixture scales, the shuffle arm past the threshold (FuzzyPairsSpec
+    // runs both). The DP sits in the condition as the SINGLE conjunct
     // `levenshtein(n1,n2,2) >= 0` — the banded threshold form returns
     // exact distances <= 2 and -1 past the band, and one >= 0 test
     // survives filter-pushdown as ONE call (the r17 `between(0,2)` form
@@ -2295,21 +2300,21 @@ object GraphTemporalQueries {
         val perName = named.groupBy(col("noun"), col("p_name"))
           .agg(min(col("p_partkey")).as("pk_min"),
             count(lit(1)).as("cnt"))
-        val secondMin = named.join(broadcast(perName), Seq("noun", "p_name"))
+        val secondMin = named.join(perName, Seq("noun", "p_name"))
           .filter(col("p_partkey") > col("pk_min"))
           .groupBy(col("noun"), col("p_name"))
           .agg(min(col("p_partkey")).as("pk_min2"))
         val nameAgg = perName
-          .join(broadcast(secondMin), Seq("noun", "p_name"), "left")
+          .join(secondMin, Seq("noun", "p_name"), "left")
         // name-level banded join: every distinct in-block pair scored
         // once. The length-delta conjunct is levenshtein's lower bound —
         // a cheap int compare before the DP. Self-pairs (n1 == n2,
         // dist 0) are real candidates only when the name has a second
         // entity to point at.
         val namePairs = nameAgg.select(col("noun"), col("p_name").as("n1"))
-          .join(broadcast(nameAgg.select(col("noun").as("noun2"),
+          .join(nameAgg.select(col("noun").as("noun2"),
             col("p_name").as("n2"), col("pk_min"), col("pk_min2"),
-            col("cnt"))),
+            col("cnt")),
             col("noun") === col("noun2")
               && abs(length(col("n1")) - length(col("n2"))) <= 2
               && levenshtein(col("n1"), col("n2"), 2) >= 0)
@@ -2317,13 +2322,13 @@ object GraphTemporalQueries {
           .select(col("noun").as("bnoun"), col("n1"), col("n2"),
             levenshtein(col("n1"), col("n2"), 2).as("dist"),
             col("pk_min"), col("pk_min2"))
-        // attach: entities join the tiny scored-pair table by their own
-        // name (broadcast — entities are never shuffled), resolve the
-        // self-name exclusion per entity, and reduce to the best match
-        // (map-side partial struct-min, one row per entity through the
-        // shuffle — same reduction contract as before).
+        // attach: entities join the scored-pair table by their own name
+        // (broadcast while it is small, so entities are not shuffled),
+        // resolve the self-name exclusion per entity, and reduce to the
+        // best match (map-side partial struct-min, one row per entity
+        // through the shuffle — same reduction contract as before).
         named
-          .join(broadcast(namePairs),
+          .join(namePairs,
             col("noun") === col("bnoun") && col("p_name") === col("n1"))
           .select(col("p_partkey").as("pk1"), col("dist"),
             when(col("n2") === col("n1") && col("p_partkey") === col("pk_min"),

@@ -86,10 +86,10 @@ object PipelineQueries {
     * Saved and loaded, not just an in-process handle (round 15): build's
     * `assigned` is a live k-means-transform LINEAGE over embeddings, so
     * every consumer that touched model.assigned re-planned corpus scans
-    * (e8 planned 8, e9 7 — first ScanBudgetSpec census). Loaded, the index
-    * is what the scaladoc always claimed: a cell-partitioned parquet
-    * artifact, and search plans read IT, pruning to probed cells
-    * file-level. Bench reports the build as "_ivf_build".
+    * (e8 planned 8, e9 7 — the first scan census, now RegistryAuditSpec).
+    * Loaded, the index is what the scaladoc always claimed: a
+    * cell-partitioned parquet artifact, and search plans read IT, pruning
+    * to probed cells file-level. Bench reports the build as "_ivf_build".
     */
   private val ivfIndex = Artifact("_ivf_build") { (s, d) =>
     val built = graft.similarity.IvfIndex.build(ivfEmb(s, d), nCells = 8)
@@ -236,8 +236,9 @@ object PipelineQueries {
     * The batch rides [[graft.Scratch.cut]] (round 15): in production a
     * change batch IS its own table; deriving it lazily from the base let
     * every u-family consumer re-plan the derivation, so u1/u2/u10 planned
-    * 8-9 documents scans each (first ScanBudgetSpec census). Cut, each
-    * query's plan reads the batch like the real table it models.
+    * 8-9 documents scans each (the first scan census, now
+    * RegistryAuditSpec). Cut, each query's plan reads the batch like the
+    * real table it models.
     */
   private def changeBatch(s: SparkSession, d: String,
       base: DataFrame): DataFrame =
@@ -1190,7 +1191,7 @@ object PipelineQueries {
         // branches (counts, token explode, bigram explode) consume the gram
         // table, and HOF lambdas get no CSE — left as a live plan, the
         // optimizer re-inlines split(lower(text)) into the shingle lambda
-        // in every branch (LambdaCseGuardSpec catches exactly this; it cost
+        // in every branch (RegistryAuditSpec catches exactly this; it cost
         // 4.7 s -> ~1 s at sf0.1). Tokenize-once-reuse-many is also the
         // only shape that survives a 100 TB corpus.
         val dir = graft.Scratch.dir(s, "t12_grams")
@@ -3708,7 +3709,7 @@ object PipelineQueries {
           p => hash32(concat_ws(" ", slice(col("w"), p - 2, lit(3)))) % 64 === 0)
         // materialize (w, bs) to storage before the chunk-hash pass:
         // the optimizer re-inlines the tokenizer split() into the HOF
-        // lambdas otherwise (LambdaCseGuardSpec's class — re-tokenizing
+        // lambdas otherwise (RegistryAuditSpec's lambda class — re-tokenizing
         // once per chunk), and a 100 TB pipeline hashes chunks off a
         // materialized token table anyway (d5's discipline)
         val dir = graft.Scratch.dir(s, "d15_chunks")
@@ -4295,7 +4296,7 @@ object PipelineQueries {
       (s, d) => {
         // the histogram frame feeds the totals aggregate AND the output
         // projection — cut (a28's discipline), or the second reference
-        // re-plans the corpus md5 pass (caught by ScanBudgetSpec at
+        // re-plans the corpus md5 pass (caught by RegistryAuditSpec at
         // registration: documents=2 uncut)
         val hist = graft.Scratch.cut(s, s"c19_hist_${graft.Scratch.key(d)}")(
           documents(s, d)

@@ -60,9 +60,9 @@ object CensusCrossoverExperiment {
     }
 
     val cutSet = args.drop(2).headOption.getOrElse("r14") match {
-      case "r14" => ScanCensus.censusCuts
-      case "r15" => ScanCensus.round15Cuts
-      case "all" => ScanCensus.allCuts
+      case "r14" => Census.censusCuts
+      case "r15" => Census.round15Cuts
+      case "all" => Census.allCuts
       case names => names.split(',').toSeq
     }
     println(f"CROSSOVER ${"query"}%-24s ${"scale"}%-8s mat_s   live_s  live/mat")

@@ -12,7 +12,7 @@ import scala.jdk.CollectionConverters._
   *
   * Coverage is MECHANIZED (ADVICE r15): the last test greps the main source
   * tree for `Scratch.cut` call sites and asserts every scratch-name prefix
-  * found is owned by a query in [[ScanCensus.allCuts]] — a new cut site
+  * found is owned by a query in [[Census.allCuts]] — a new cut site
   * that isn't toggled through the differential fails the build, instead of
   * silently joining an unverified tail like the round-15 sites did.
   */
@@ -24,7 +24,7 @@ class CutDifferentialSpec extends SparkSpec {
     def results(name: String): Seq[String] =
       SparkEntry.queries(name)(spark, sfDir)
         .collect().map(_.toString).toSeq.sorted
-    for (name <- ScanCensus.allCuts) {
+    for (name <- Census.allCuts) {
       spark.conf.set(Scratch.CutKey, "true")
       val mat =
         try results(name)
@@ -48,12 +48,12 @@ class CutDifferentialSpec extends SparkSpec {
     try {
       val live = SparkEntry.queries("d13_containment")(spark, sfDir)
         .queryExecution.executedPlan.toString
-      assert(ScanCensus.counts(live).getOrElse("documents", 0) >= 10,
+      assert(Census.scans(live).getOrElse("documents", 0) >= 10,
         "live d13 no longer multiplies documents scans — toggle broken?")
     } finally spark.conf.set(Scratch.CutKey, "true")
     val mat = SparkEntry.queries("d13_containment")(spark, sfDir)
       .queryExecution.executedPlan.toString
-    assert(ScanCensus.counts(mat).getOrElse("documents", 0) == 0)
+    assert(Census.scans(mat).getOrElse("documents", 0) == 0)
   }
 
   /** scratch-name prefix at each grep'd cut site -> the registered query
@@ -139,15 +139,15 @@ class CutDifferentialSpec extends SparkSpec {
     val unowned = prefixes.filterNot(siteOwner.contains)
     assert(unowned.isEmpty,
       s"Scratch.cut sites with no differential owner: ${unowned.toSeq.sorted
-        .mkString(", ")} — add the owning query to ScanCensus.round15Cuts " +
+        .mkString(", ")} — add the owning query to Census.round15Cuts " +
         "(or a successor list) and map the prefix in siteOwner")
     val stale = siteOwner.keySet -- prefixes
     assert(stale.isEmpty,
       s"siteOwner maps prefixes no longer present in source: ${stale.toSeq
         .sorted.mkString(", ")}")
-    val unToggled = siteOwner.values.toSet -- ScanCensus.allCuts.toSet
+    val unToggled = siteOwner.values.toSet -- Census.allCuts.toSet
     assert(unToggled.isEmpty,
-      s"site owners missing from ScanCensus.allCuts: ${unToggled.toSeq.sorted
+      s"site owners missing from Census.allCuts: ${unToggled.toSeq.sorted
         .mkString(", ")}")
   }
 }

@@ -30,27 +30,31 @@ class FuzzyPairsSpec extends SparkSpec {
     d(a.length)(b.length)
   }
 
-  test("d10 distinct-name rewrite == entity-level brute force on planted names") {
+  // (pk, name); noun = 2nd word. Planted arms documented above.
+  private val rows = Seq(
+    (10L, "red bolt"),    // dup name, pk_min     -> best (0, 11)
+    (11L, "red bolt"),    // dup name, not min    -> best (0, 10)
+    (12L, "red bolt"),    //                      -> best (0, 10)
+    (20L, "rad bolt"),    // singleton, dist 1 to "red bolt" (pks 10..12)
+    (30L, "rouge bolt"),  // singleton, no match within 2 of anything
+    (40L, "blue gear"),   // dist-1 of 41 and 42's names
+    (41L, "flue gear"),   // tie: dist 1 to both "blue gear" and "clue gear"
+    (42L, "clue gear"),   //   -> min pk across both names wins
+    (50L, "aa ring"),     // dist-2 pair at the length-delta boundary
+    (51L, "aaba ring"),   // |len diff| = 2, dist = 2
+    (60L, "zz plate"))    // singleton noun block: no candidate
+
+  /** Runs d10 over the planted fixture, asserts it equals the brute force,
+    * and returns the executed plan.
+    */
+  private def checkPlanted(): String = {
     import spark.implicits._
-    // (pk, name); noun = 2nd word. Planted arms documented above.
-    val rows = Seq(
-      (10L, "red bolt"),    // dup name, pk_min     -> best (0, 11)
-      (11L, "red bolt"),    // dup name, not min    -> best (0, 10)
-      (12L, "red bolt"),    //                      -> best (0, 10)
-      (20L, "rad bolt"),    // singleton, dist 1 to "red bolt" (pks 10..12)
-      (30L, "rouge bolt"),  // singleton, no match within 2 of anything
-      (40L, "blue gear"),   // dist-1 of 41 and 42's names
-      (41L, "flue gear"),   // tie: dist 1 to both "blue gear" and "clue gear"
-      (42L, "clue gear"),   //   -> min pk across both names wins
-      (50L, "aa ring"),     // dist-2 pair at the length-delta boundary
-      (51L, "aaba ring"),   // |len diff| = 2, dist = 2
-      (60L, "zz plate"))    // singleton noun block: no candidate
     val dir = Files.createTempDirectory("fuzzy_fixture").toFile
     try {
       rows.toDF("p_partkey", "p_name")
         .write.mode("overwrite").parquet(s"${dir.getAbsolutePath}/part.parquet")
-      val got = SparkEntry.queries("d10_fuzzy_pairs")(spark, dir.getAbsolutePath)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      val df = SparkEntry.queries("d10_fuzzy_pairs")(spark, dir.getAbsolutePath)
+      val got = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
       val noun = rows.map { case (pk, n) => pk -> n.split(" ")(1) }.toMap
       val want = rows.flatMap { case (pk1, n1) =>
         val cands = rows.filter { case (pk2, n2) =>
@@ -69,12 +73,34 @@ class FuzzyPairsSpec extends SparkSpec {
       assert(!want.exists(_._1 == 30L) && !want.exists(_._1 == 60L))
       assert(want.exists { case (pk, pk2, d) => pk == 41L && pk2 == 40L && d == 1 })
       assert(want.exists { case (pk, pk2, d) => pk == 50L && pk2 == 51L && d == 2 })
+      df.queryExecution.executedPlan.toString
     } finally {
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
         f.delete(); ()
       }
       rm(dir)
+    }
+  }
+
+  test("d10 distinct-name rewrite == entity-level brute force on planted names") {
+    checkPlanted()
+  }
+
+  test("d10 shuffle arm (broadcast joins disabled) == entity-level brute force") {
+    // d10 carries no broadcast() hint, so with both size thresholds off
+    // every join must plan as a shuffle join — the shape a corpus with
+    // more distinct names than the threshold gets
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val saved = keys.map(k => k -> spark.conf.getAll.get(k))
+    keys.foreach(spark.conf.set(_, "-1"))
+    try {
+      val plan = checkPlanted()
+      assert(!plan.contains("BroadcastExchange"),
+        s"shuffle arm not exercised — a join still broadcasts:\n$plan")
+    } finally saved.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
   }
 }

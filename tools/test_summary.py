@@ -7,18 +7,36 @@ recorded which suites had passed. This tool turns the per-suite XML in
 target/test-reports/ into one mechanically-sourced markdown artifact
 (same provenance discipline as tools/bench_notes.py): every figure
 comes from the reports, and the tool REFUSES to write the doc if any
-suite failed/errored or if the report set looks stale or partial.
+suite failed/errored, if the report set looks stale or partial, or if a
+report names a suite no longer declared (as a class or object) under
+src/test/scala — a deleted suite's old XML would otherwise be counted.
 
 Usage: python3 tools/test_summary.py [OUT.md]   (default TESTS.md)
 Exit 1 (and no doc) unless every suite is green.
 """
 import glob
 import os
+import re
 import sys
 import xml.etree.ElementTree as ET
 from datetime import datetime, timezone
 
 REPORT_DIR = "target/test-reports"
+SOURCE_DIR = "src/test/scala"
+
+
+def declared_suites():
+    """Fully qualified names of every class/object under SOURCE_DIR."""
+    names = set()
+    for path in glob.glob(f"{SOURCE_DIR}/**/*.scala", recursive=True):
+        with open(path) as f:
+            src = f.read()
+        pkg = re.search(r"^package\s+([\w.]+)", src, re.M)
+        prefix = pkg.group(1) + "." if pkg else ""
+        for m in re.finditer(r"^\s*(?:(?:final|abstract|sealed|case)\s+)*"
+                             r"(?:class|object)\s+(\w+)", src, re.M):
+            names.add(prefix + m.group(1))
+    return names
 
 
 def main():
@@ -27,6 +45,7 @@ def main():
     if not files:
         sys.exit(f"no reports in {REPORT_DIR} — run `sbt -batch test` first")
 
+    declared = declared_suites()
     rows, bad = [], []
     total = {"tests": 0, "failures": 0, "errors": 0, "time": 0.0}
     mtimes = []
@@ -37,6 +56,11 @@ def main():
             bad.append(f"{f}: truncated/unparseable XML ({e})")
             continue
         name = suite.get("name", os.path.basename(f))
+        if name not in declared:
+            # a deleted or renamed suite's report outlives its source
+            bad.append(f"{name}: stale report ({f}) — no class or object "
+                       f"{name} in {SOURCE_DIR}; delete the report")
+            continue
         tests = int(suite.get("tests", 0))
         failures = int(suite.get("failures", 0))
         errors = int(suite.get("errors", 0))
