@@ -525,16 +525,34 @@ class RegistryAuditSpec extends SparkSpec {
         s"name (remove them): $stale")
   }
 
-  test("every registered query has a committed scan and exchange budget; none is stale") {
+  // one key set for both columns of the table; each column's test also
+  // checks that its own entries parse, so a hand-edited typo in either
+  // column names the column it is in
+  private def budgetCoverage(kind: String,
+                             pick: ((String, String)) => String): Unit = {
     val names = SparkEntry.queries.keySet -- Census.skip
     val missing = names -- budget.keySet
     val stale = budget.keySet -- names
+    val malformed = budget.toSeq.sortBy(_._1)
+      .filter { case (_, row) => Try(Census.parse(pick(row))).isFailure }
+      .map { case (name, row) => s"$name: [${pick(row)}]" }
     assert(missing.isEmpty,
-      "new queries registered without a budget (run CensusMain, review, " +
-        "commit): " + missing.toSeq.sorted.mkString(", "))
+      s"new queries registered without a $kind budget (run CensusMain, " +
+        "review, commit): " + missing.toSeq.sorted.mkString(", "))
     assert(stale.isEmpty,
       "budget rows for unregistered queries (delete them): " +
         stale.toSeq.sorted.mkString(", "))
+    assert(malformed.isEmpty,
+      s"$kind budget entries that do not parse as k=v,...:\n" +
+        malformed.mkString("\n"))
+  }
+
+  test("every registered query has a committed scan budget; none is stale") {
+    budgetCoverage("scan", _._1)
+  }
+
+  test("every registered query has a committed exchange budget; none is stale") {
+    budgetCoverage("exchange", _._2)
   }
 
   test("observed fact-scan counts equal the committed budgets exactly") {
