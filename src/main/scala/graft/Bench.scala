@@ -1,4 +1,5 @@
 package graft
+import graft.sources.Sources
 import org.apache.spark.sql.SparkSession
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -169,7 +170,7 @@ object Bench {
           .as("word"))
         .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
         .write.mode("overwrite").parquet(wcPath)
-      def wc = spark.read.parquet(wcPath)
+      def wc = Sources.parquet(spark, wcPath)
       record("_bpe_train64",
         try timed {
           val learned = graft.operators.BpeTrainer.train(wc, "word", "cnt",

@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Sources
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -103,7 +104,7 @@ object Scratch {
       // a concurrent second constructor (harness/Par) blocks until the
       // write finishes instead of reading a partial dir
       written.once(s, name)(df.write.mode("overwrite").parquet(p))
-      s.read.parquet(p)
+      Sources.parquet(s, p)
     } else df
 
   /** [[cut]] for producers whose CONSTRUCTION is itself the expensive work
@@ -123,7 +124,7 @@ object Scratch {
     if (s.conf.get(CutKey, "true").toBoolean) {
       val p = dir(s, name)
       written.once(s, name)(mk.write.mode("overwrite").parquet(p))
-      s.read.parquet(p)
+      Sources.parquet(s, p)
     } else mk
 
   /** Collision-resistant per-dataset key for scratch stores that WIPE

@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Parquet table loaders for the synthetic star schema under
@@ -13,7 +14,7 @@ object Tables {
     // versions, which Spark 4 only reads as a long when this legacy flag
     // is on (set here so it holds under any caller-supplied session).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    Sources.parquet(spark, s"$sfDir/$name.parquet")
   }
 
   /** events.ts (nanos-since-epoch long) as a microsecond-precision

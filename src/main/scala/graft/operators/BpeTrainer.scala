@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Sources
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -61,7 +62,7 @@ object BpeTrainer {
       case Some(dir) =>
         val p = s"$dir/iter_$round"
         df.write.mode("overwrite").parquet(p)
-        spark.read.parquet(p)
+        Sources.parquet(spark, p)
       case None => df
     }
     var syms = wordCounts.select(
@@ -139,7 +140,7 @@ object BpeTrainer {
       case Some(dir) =>
         val p = s"$dir/batch_iter_$round"
         df.write.mode("overwrite").parquet(p)
-        spark.read.parquet(p)
+        Sources.parquet(spark, p)
       case None => df
     }
     var syms = wordCounts.select(

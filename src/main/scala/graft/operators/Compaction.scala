@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
@@ -74,7 +75,7 @@ object Compaction {
     // must not wrap to a negative partition count
     val nFiles = math.min(Int.MaxValue.toLong,
       math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes)).toInt
-    val df = spark.read.parquet(srcDir)
+    val df = Sources.parquet(spark, srcDir)
     val compacted =
       if (sortCols.isEmpty) df.repartition(nFiles)
       else df.repartitionByRange(nFiles, sortCols: _*)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Sources
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -39,7 +40,7 @@ object ConnectedComponents {
       case Some(dir) =>
         val p = s"$dir/iter_$round"
         df.write.mode("overwrite").parquet(p)
-        spark.read.parquet(p)
+        Sources.parquet(spark, p)
       case None => df
     }
     val sym = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Sources
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -42,7 +43,7 @@ object PageRank {
       case Some(dir) =>
         val p = s"$dir/iter_$round"
         df.write.mode("overwrite").parquet(p)
-        spark.read.parquet(p)
+        Sources.parquet(spark, p)
       case None => df
     }
     // materialize the loop invariants once when storage is available:
@@ -52,7 +53,7 @@ object PageRank {
     def stable(df: DataFrame, name: String): DataFrame = checkpointDir match {
       case Some(dir) =>
         df.write.mode("overwrite").parquet(s"$dir/$name")
-        spark.read.parquet(s"$dir/$name")
+        Sources.parquet(spark, s"$dir/$name")
       case None => df
     }
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),

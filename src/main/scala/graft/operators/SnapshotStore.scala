@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.Sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -115,7 +116,7 @@ object SnapshotStore {
   }
 
   def readVersion(s: SparkSession, root: String, v: Int): DataFrame =
-    s.read.parquet(s"$root/v$v")
+    Sources.parquet(s, s"$root/v$v")
 
   /** Delta-style RESTORE: re-commit the CONTENT of `toVersion` as a
     * brand-new version and return the new version number. Rolling back

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.sources.Sources
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Q, Tables}
@@ -155,7 +156,10 @@ object AdvancedQueries {
           col("value"))
         val dim = ev.select(col("k")).distinct()
           .select(col("k"), concat(lit("grp_"), coalesce(col("k"), lit("none"))).as("label"))
-        ev.join(dim, ev("k") <=> dim("k"))
+        // dim derives from ev, so both sides are aliased: an unaliased
+        // `ev("k") <=> dim("k")` names one lineage twice and resolves only
+        // through Spark's self-join disambiguation
+        ev.as("e").join(dim.as("d"), col("e.k") <=> col("d.k"))
           .groupBy(col("label"))
           .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sv"))
           .orderBy("label")
@@ -795,7 +799,7 @@ object AdvancedQueries {
           filter(graft.operators.BpeTrainer.encode(col("word"), table),
             p => p =!= "").as("pieces"))
           .write.mode("overwrite").parquet(store)
-        val vocab = s.read.parquet(store)
+        val vocab = Sources.parquet(s, store)
           .select(col("word"), size(col("pieces")).as("n_p"),
             (concat_ws("", col("pieces")) === col("word")
               && size(col("pieces")) <= length(col("word"))).as("good"))
@@ -846,7 +850,7 @@ object AdvancedQueries {
         val scratch = graft.Scratch.dir(s, "g2")
         edges.write.mode("overwrite").parquet(s"$scratch/edges")
         graft.operators.PageRank
-          .runDense(s.read.parquet(s"$scratch/edges"), "src", "dst", "w",
+          .runDense(Sources.parquet(s, s"$scratch/edges"), "src", "dst", "w",
             iters = 8)
           .join(broadcast(nation(s, d)), col("node") === col("n_nationkey"))
           .select(col("node"), col("n_name"),
@@ -1661,7 +1665,7 @@ object AdvancedQueries {
         GlobalRank.withRowNumber(kept, Seq(col("bin").asc), "rk")
           .select(col("rk"), col("b"))
           .write.mode("overwrite").parquet(dir)
-        val ranked = s.read.parquet(dir)
+        val ranked = Sources.parquet(s, dir)
         val flips = ranked.as("a")
           .join(ranked.as("p"), col("a.rk") === col("p.rk") + 1)
           .agg(coalesce(sum((col("a.b") =!= col("p.b")).cast("long")),
@@ -2310,7 +2314,7 @@ object AdvancedQueries {
         GlobalRank.withRowNumber(byBin, Seq(col("bin").asc), "rk")
           .select(col("rk"), col("x"))
           .write.mode("overwrite").parquet(dir)
-        val ranked = s.read.parquet(dir)
+        val ranked = Sources.parquet(s, dir)
         val tot = ranked.agg(
           sum(col("x").cast("decimal(38,0)")).as("sx"),
           count(lit(1)).as("n"))
@@ -2520,7 +2524,7 @@ object AdvancedQueries {
           .agg(expr("sum(CAST(c AS DECIMAL(38,0))) * 100 div count(1)")
             .as("y"))
           .write.mode("overwrite").parquet(dir)
-        val daily = s.read.parquet(dir)
+        val daily = Sources.parquet(s, dir)
         val slopes = daily.as("a")
           .join(broadcast(daily.as("b")), col("b.day") > col("a.day"))
           .select(expr("(b.y - a.y) * 1000000 div (b.day - a.day)")

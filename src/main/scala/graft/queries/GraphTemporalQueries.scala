@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.sources.Sources
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Artifact, Q, Tables}
@@ -53,7 +54,7 @@ object GraphTemporalQueries {
   }
   private def coocEdgesWeighted(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(coocEdgeTable.get(s, d))
+    Sources.parquet(s, coocEdgeTable.get(s, d))
   private def coocEdges(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     coocEdgesWeighted(s, d).select(col("u"), col("v"))
@@ -91,7 +92,7 @@ object GraphTemporalQueries {
       e.select(col("u").as("node"), col("v").as("nbr"))
         .union(e.select(col("v"), col("u")))
         .write.mode("overwrite").parquet(nbPath)
-      val nb = s.read.parquet(nbPath)
+      val nb = Sources.parquet(s, nbPath)
       var labels = nb.select(col("node")).distinct()
         .select(col("node"), col("node").as("label"))
       for (round <- 1 to 3) {
@@ -105,7 +106,7 @@ object GraphTemporalQueries {
           .select(col("node"), col("best.label").as("label"))
         val path = graft.Scratch.dir(s, s"${tag}_round$round")
         next.write.mode("overwrite").parquet(path)
-        labels = s.read.parquet(path)
+        labels = Sources.parquet(s, path)
       }
       labels
     }
@@ -174,7 +175,7 @@ object GraphTemporalQueries {
         val scratch = graft.Scratch.dir(s, "g8")
         def ckpt(df: org.apache.spark.sql.DataFrame, name: String) = {
           df.write.mode("overwrite").parquet(s"$scratch/$name")
-          s.read.parquet(s"$scratch/$name")
+          Sources.parquet(s, s"$scratch/$name")
         }
         val e0 = coocEdges(s, d)
         def among(act: org.apache.spark.sql.DataFrame) = e0
@@ -259,7 +260,7 @@ object GraphTemporalQueries {
         val scratch = graft.Scratch.dir(s, "g9")
         def ckpt(df: org.apache.spark.sql.DataFrame, name: String) = {
           df.write.mode("overwrite").parquet(s"$scratch/$name")
-          s.read.parquet(s"$scratch/$name")
+          Sources.parquet(s, s"$scratch/$name")
         }
         val ew = ckpt(lineitem(s, d)
           .select(col("l_orderkey"), col("l_suppkey"))
@@ -633,7 +634,7 @@ object GraphTemporalQueries {
             expr("ts div 3600000000000").as("h"))
           .agg(round(sum(col("value")), 2).as("sv"))
           .write.mode("overwrite").parquet(hourlyPath)
-        val hourly = s.read.parquet(hourlyPath)
+        val hourly = Sources.parquet(s, hourlyPath)
         val grid = hourly.groupBy(col("user_id"))
           .agg(min(col("h")).as("mn"), max(col("h")).as("mx"))
           .select(col("user_id").as("g_user"),
@@ -1359,7 +1360,7 @@ object GraphTemporalQueries {
         e.select(col("u").as("node"), col("v").as("nbr"))
           .union(e.select(col("v"), col("u")))
           .write.mode("overwrite").parquet(nbPath)
-        val nb = s.read.parquet(nbPath)
+        val nb = Sources.parquet(s, nbPath)
         var dist = nb.select(col("node")).distinct()
           .filter(col("node") < 100)
           .select(col("node"), lit(0).as("dist"))
@@ -1372,7 +1373,7 @@ object GraphTemporalQueries {
             .groupBy(col("node")).agg(min(col("dist")).as("dist"))
           val path = graft.Scratch.dir(s, s"g5_round$round")
           next.write.mode("overwrite").parquet(path)
-          dist = s.read.parquet(path)
+          dist = Sources.parquet(s, path)
         }
         dist.orderBy(col("node"))
       },
@@ -1421,7 +1422,7 @@ object GraphTemporalQueries {
         e.select(col("u").as("node"), col("v").as("nbr"))
           .union(e.select(col("v"), col("u")))
           .write.mode("overwrite").parquet(nbPath)
-        val nb = s.read.parquet(nbPath)
+        val nb = Sources.parquet(s, nbPath)
         var dist = nb.select(col("node")).distinct()
           .filter(col("node") < 100)
           .select(col("node").as("seed"), col("node"), lit(0).as("dist"))
@@ -1435,7 +1436,7 @@ object GraphTemporalQueries {
             .agg(min(col("dist")).as("dist"))
           val path = graft.Scratch.dir(s, s"g16_round$round")
           next.write.mode("overwrite").parquet(path)
-          dist = s.read.parquet(path)
+          dist = Sources.parquet(s, path)
         }
         dist.filter(col("dist") > 0)
           .groupBy(col("seed"))
@@ -1500,7 +1501,7 @@ object GraphTemporalQueries {
         e.select(col("u").as("node"), col("v").as("nbr"), col("w"))
           .union(e.select(col("v"), col("u"), col("w")))
           .write.mode("overwrite").parquet(nbPath)
-        val nb = s.read.parquet(nbPath)
+        val nb = Sources.parquet(s, nbPath)
         var dist = nb.select(col("node")).distinct()
           .filter(col("node") < 100)
           .select(col("node"), lit(0L).as("dist"))
@@ -1513,7 +1514,7 @@ object GraphTemporalQueries {
             .groupBy(col("node")).agg(min(col("dist")).as("dist"))
           val path = graft.Scratch.dir(s, s"g6_round$round")
           next.write.mode("overwrite").parquet(path)
-          dist = s.read.parquet(path)
+          dist = Sources.parquet(s, path)
         }
         dist.orderBy(col("node"))
       },
@@ -1937,7 +1938,7 @@ object GraphTemporalQueries {
         // ScanBudget f6 events=1 → 0).
         val countsPath = graft.Scratch.dir(s, "f6_counts")
         counts.write.mode("overwrite").parquet(countsPath)
-        val countsF = s.read.parquet(countsPath)
+        val countsF = Sources.parquet(s, countsPath)
         val totals = countsF.groupBy(col("from_type"))
           .agg(sum(col("n_pair")).as("n_from"))
         // operators/MarkovChain pads SINK states (appearing only as
@@ -1952,7 +1953,7 @@ object GraphTemporalQueries {
         val transPath = graft.Scratch.dir(s, "f6_trans")
         graft.operators.MarkovChain.paddedTransitions(countsF)
           .write.mode("overwrite").parquet(transPath)
-        val trans = s.read.parquet(transPath)
+        val trans = Sources.parquet(s, transPath)
         val (pi, prev) = graft.operators.MarkovChain.stationary(s, trans, 8)
         val mass = pi.agg(sum(col("p_x1e6")).as("mass_x1e6"))
         pi.join(prev.select(col("state"), col("p_x1e6").as("p_prev")),
@@ -2637,7 +2638,7 @@ object GraphTemporalQueries {
           .agg(sum(col("e")).as("d"), sum(lit(1L) - col("e")).as("c"))
           .withColumn("out", col("d") + col("c"))
           .write.mode("overwrite").parquet(dir)
-        val lt = s.read.parquet(dir)
+        val lt = Sources.parquet(s, dir)
         val cum = GlobalRank.withRankAndRunningTotals(lt,
           Seq(col("t").asc), Seq("out"), "rk", Seq("cumout"))
         val tot = lt.agg(sum(col("out")).as("nn"))
@@ -2724,7 +2725,7 @@ object GraphTemporalQueries {
           .select(col("user_id"), expr("ts div 86400000000000").as("day"))
           .distinct()
           .write.mode("overwrite").parquet(dir)
-        val ud = s.read.parquet(dir)
+        val ud = Sources.parquet(s, dir)
         val dau = ud.groupBy(col("day"))
           .agg(count_distinct(col("user_id")).as("dau"))
         val wau = ud

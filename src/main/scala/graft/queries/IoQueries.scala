@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.sources.Sources
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.{Artifact, Q, Tables}
@@ -151,7 +152,7 @@ object IoQueries {
         val out = tmp(s, "o7_events")
         events(s, d).repartition(8, col("user_id"))
           .write.mode("overwrite").parquet(out)
-        s.read.parquet(out)
+        Sources.parquet(s, out)
           .groupBy(col("user_id")).agg(count(lit(1)).as("n"))
           .orderBy("user_id")
       },
@@ -192,7 +193,7 @@ object IoQueries {
         val out = tmp(s, "o9_events")
         events(s, d).select("event_id", "user_id", "event_type", "value")
           .write.mode("overwrite").partitionBy("event_type").parquet(out)
-        s.read.parquet(out)
+        Sources.parquet(s, out)
           .filter(col("event_type") === "click")
           .groupBy(col("user_id"))
           .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sv"))
@@ -220,8 +221,8 @@ object IoQueries {
         val after = graft.operators.Compaction.compactParquet(
           s, src, dst, targetFileBytes = 512L * 1024 * 1024,
           sortCols = Seq(col("user_id")))
-        val rowsBefore = s.read.parquet(src).count()
-        val rowsAfter = s.read.parquet(dst).count()
+        val rowsBefore = Sources.parquet(s, src).count()
+        val rowsAfter = Sources.parquet(s, dst).count()
         val spark = s
         import spark.implicits._
         Seq((before, after, rowsBefore, rowsAfter,

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.sources.Sources
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.{Artifact, Q, Tables}
@@ -687,7 +688,7 @@ object MlQueries {
             round(col("value") * 100).cast("long").as("c"),
             (col("event_type") === "purchase").cast("long").as("label"))
           .write.mode("overwrite").parquet(dir)
-        val ev = s.read.parquet(dir)
+        val ev = Sources.parquet(s, dir)
         val ranked = GlobalRank.withRowNumber(ev,
           Seq(col("c").desc, col("event_id").asc), "rk")
         val tot = ev.agg(count(lit(1)).as("nn"), sum(col("label")).as("pp"))
@@ -776,7 +777,7 @@ object MlQueries {
           .agg(sum(col("is_en")).as("pos"),
             sum(lit(1L) - col("is_en")).as("neg"))
           .write.mode("overwrite").parquet(dir)
-        val byScore = s.read.parquet(dir)
+        val byScore = Sources.parquet(s, dir)
         GlobalRank.withRankAndRunningTotals(byScore,
             Seq(col("sc").asc), Seq("neg"), "sr", Seq("cum_neg"))
           .agg(sum(col("pos")).cast("long").as("n_pos"),

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.sources.Sources
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -177,7 +178,7 @@ object PipelineQueries {
       val scratch = graft.Scratch.dir(s, "dupcomps")
       pairs.write.mode("overwrite").parquet(s"$scratch/pairs")
       graft.operators.ConnectedComponents
-        .propagateMinLabel(s.read.parquet(s"$scratch/pairs"), "a_id", "b_id",
+        .propagateMinLabel(Sources.parquet(s, s"$scratch/pairs"), "a_id", "b_id",
           maxIter = 10, checkpointDir = Some(s"$scratch/labels"))
         .select(col("node").as("doc_id"), col("comp"))
     }
@@ -468,7 +469,7 @@ object PipelineQueries {
           .groupBy(md5(col("text")).as("h"))
           .agg(min(col("doc_id")).as("first_id"))
           .write.mode("overwrite").parquet(store)
-        val ledger = s.read.parquet(store)
+        val ledger = Sources.parquet(s, store)
         val batch = docs.filter(col("doc_id") >= 400)
           .unionByName(docs.filter(col("doc_id").between(100, 119))
             .withColumn("doc_id", col("doc_id") + 10000))
@@ -527,7 +528,7 @@ object PipelineQueries {
           .select(col("doc_id").as(idc), col("sig").as(sigc),
             posexplode_outer(lshBands(col("sig"), 4, 4))
               .as(Seq("band_idx", "band_key")))
-        val cb = banded(s.read.parquet(store), "c_id", "c_sig")
+        val cb = banded(Sources.parquet(s, store), "c_id", "c_sig")
         val batch = sigs.filter(col("doc_id") % 4 === 0)
         val res = banded(batch, "b_id", "b_sig")
           .join(cb, Seq("band_idx", "band_key"))
@@ -842,7 +843,7 @@ object PipelineQueries {
           .select(col("doc_id"),
             array_distinct(shinglesNative(col("text"), 3)).as("sh"))
           .write.mode("overwrite").parquet(dir)
-        val sh = s.read.parquet(dir)
+        val sh = Sources.parquet(s, dir)
         sh.as("a")
           .join(sh.as("b"), col("b.doc_id") === col("a.doc_id") + 1)
           .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
@@ -976,7 +977,7 @@ object PipelineQueries {
           .groupBy(col("lang"), col("pred"))
           .agg(count(lit(1)).as("n"))
           .write.mode("overwrite").parquet(dir)
-        val cm = s.read.parquet(dir)
+        val cm = Sources.parquet(s, dir)
         val byTrue = cm.groupBy(col("lang"))
           .agg(sum(col("n")).as("n_true"),
             sum(when(col("pred") === col("lang"), col("n"))
@@ -1199,7 +1200,7 @@ object PipelineQueries {
           .select(col("doc_id"), col("w"),
             shinglesNative(col("text"), 2).as("bg"))
           .write.mode("overwrite").parquet(dir)
-        val base = s.read.parquet(dir)
+        val base = Sources.parquet(s, dir)
         val counts = base.select(col("doc_id"),
           size(col("w")).cast("long").as("n_tokens"),
           size(col("bg")).cast("long").as("n_bigrams"))
@@ -1266,7 +1267,7 @@ object PipelineQueries {
           .select(col("doc_id"),
             array_distinct(shinglesNative(col("text"), 3)).as("sh"))
           .write.mode("overwrite").parquet(dir)
-        val sh = s.read.parquet(dir)
+        val sh = Sources.parquet(s, dir)
         val bench = sh.filter(col("doc_id") % 20 === 0)
           .select(explode(col("sh")).as("g")).distinct()
         val train = sh.filter(col("doc_id") % 20 =!= 0)
@@ -1327,7 +1328,7 @@ object PipelineQueries {
           .select(col("doc_id"),
             array_distinct(shinglesNative(col("text"), 3)).as("sh"))
           .write.mode("overwrite").parquet(dir)
-        val sh = s.read.parquet(dir)
+        val sh = Sources.parquet(s, dir)
         val bench = sh.filter(col("doc_id") % 20 === 0)
           .select(explode(col("sh")).as("g")).distinct()
         // ~1% FP at 64k expected items; sized by formula, not by counting
@@ -1752,7 +1753,7 @@ object PipelineQueries {
           transform(col("v"), x => round(x / col("scale")).cast("long"))
             .as("qv"))
           .write.mode("overwrite").parquet(store)
-        val q = s.read.parquet(store)
+        val q = Sources.parquet(s, store)
         val pCols = (0 until k).map { j =>
           aggregate(zip_with(col("qv"), array(signs(j).map(lit).toSeq: _*),
             (x, sg) => x * sg), lit(0L), _ + _).as(s"p$j")
@@ -2261,7 +2262,7 @@ object PipelineQueries {
             .select(col("doc_id"), col("text"), col("rev"), col("ver")))
         val path = graft.Scratch.dir(s, s"u11_base_${graft.Scratch.key(d)}")
         compacted.write.mode("overwrite").parquet(path)
-        s.read.parquet(path)
+        Sources.parquet(s, path)
           .select(col("doc_id"), col("rev"), col("ver"),
             md5(col("text")).as("text_md5"))
           .orderBy("doc_id")
@@ -2365,7 +2366,7 @@ object PipelineQueries {
         val ledgerPath = graft.Scratch.dir(s, "u4_ledger")
         partial(ev.filter(col("event_id") % 5 =!= 4))
           .write.mode("overwrite").parquet(ledgerPath)
-        s.read.parquet(ledgerPath)
+        Sources.parquet(s, ledgerPath)
           .unionByName(partial(ev.filter(col("event_id") % 5 === 4)))
           .groupBy(col("user_id"))
           .agg(sum(col("n_events")).as("n_events"),
@@ -3260,7 +3261,7 @@ object PipelineQueries {
             array_distinct(shinglesNative(col("text"), 3)).as("sh"),
             minhashSigNative(col("text"), 16).as("sig"))
           .write.mode("overwrite").parquet(dir)
-        val base = s.read.parquet(dir)
+        val base = Sources.parquet(s, dir)
         base.as("a")
           .join(base.as("b"), col("b.doc_id") === col("a.doc_id") + 1)
           .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
@@ -3716,7 +3717,7 @@ object PipelineQueries {
         tokenized(s, d)
           .select(col("doc_id"), col("w"), bounds.as("bs"))
           .write.mode("overwrite").parquet(dir)
-        val base = s.read.parquet(dir)
+        val base = Sources.parquet(s, dir)
         val starts = concat(array(lit(1)), transform(col("bs"), b => b + 1))
         val ends = concat(col("bs"), array(size(col("w"))))
         base
@@ -4019,7 +4020,7 @@ object PipelineQueries {
           .topKPrefixes(emb, q, 10, Seq(8, 16, 32, 64))
           .select(col("dim"), col("q_id"), col("cand_id"))
           .write.mode("overwrite").parquet(dir)
-        val all = s.read.parquet(dir)
+        val all = Sources.parquet(s, dir)
         val full = all.filter(col("dim") === 64)
           .select(col("q_id"), col("cand_id"), lit(1L).as("hit"))
         all.join(full, Seq("q_id", "cand_id"), "left_outer")
@@ -4092,7 +4093,7 @@ object PipelineQueries {
             expr("1000000000000 div nl").as("tl"),
             expr("1000000000000 div ns").as("tsrc"))
           .write.mode("overwrite").parquet(base)
-        var cur = s.read.parquet(base)
+        var cur = Sources.parquet(s, base)
         for (r <- 1 to 3) {
           val rowSum = cur.groupBy(col("lang")).agg(sum(col("w")).as("sl"))
           val afterRow = cur.join(broadcast(rowSum), Seq("lang"))
@@ -4107,7 +4108,7 @@ object PipelineQueries {
                 .as("w"), col("tl"), col("tsrc"))
           val p = graft.Scratch.dir(s, s"c16_round$r")
           next.write.mode("overwrite").parquet(p)
-          cur = s.read.parquet(p)
+          cur = Sources.parquet(s, p)
         }
         val byLang = Window.partitionBy(col("lang"))
         cur
@@ -4226,7 +4227,7 @@ object PipelineQueries {
           .agg(sum((col("ts") < col("cut")).cast("long")).as("n1"),
             sum((col("ts") >= col("cut")).cast("long")).as("n2"))
           .write.mode("overwrite").parquet(dir)
-        val cat = s.read.parquet(dir)
+        val cat = Sources.parquet(s, dir)
         val tot = cat.agg(sum(col("n1")).as("t1"), sum(col("n2")).as("t2"))
         val per = cat.crossJoin(broadcast(tot))
           .select(col("event_type"), col("n1"), col("n2"),

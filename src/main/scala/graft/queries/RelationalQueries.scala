@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -652,7 +653,7 @@ object RelationalQueries {
           .agg(sum(col("rev_x1e4").cast("decimal(38,0)")).cast("long")
             .as("total_rev_x1e4"))
           .write.mode("overwrite").parquet(dir)
-        val rev = s.read.parquet(dir)
+        val rev = Sources.parquet(s, dir)
         val winners = rev
           .join(broadcast(rev.agg(max(col("total_rev_x1e4")).as("mx"))),
             col("total_rev_x1e4") === col("mx"))
@@ -1327,7 +1328,7 @@ object RelationalQueries {
           .agg(sum((col("qty") * col("retail_cents"))
             .cast("decimal(38,0)")).as("val"))
           .write.mode("overwrite").parquet(dir)
-        val pv = s.read.parquet(dir)
+        val pv = Sources.parquet(s, dir)
         pv.join(broadcast(pv.agg(sum(col("val")).as("tv"),
             count(lit(1)).as("np"))))
           .filter(col("val") * col("np") > col("tv") * 2)

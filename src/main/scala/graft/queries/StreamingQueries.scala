@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.sources.Sources
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -186,7 +187,7 @@ object StreamingQueries {
 
   private def fileStream(s: SparkSession, landing: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val r = s.readStream.schema(s.read.parquet(landing).schema)
+    val r = s.readStream.schema(Sources.parquetSchema(s, landing))
     maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
     r.parquet(landing)
   }
@@ -320,7 +321,7 @@ object StreamingQueries {
           .start()
         try q.awaitTermination() finally q.stop()
         requireSingleBatch("st2_stream_dedup", q)
-        s.read.parquet(out)
+        Sources.parquet(s, out)
           .groupBy(col("event_type"))
           .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sv"))
           .orderBy("event_type")
@@ -358,7 +359,7 @@ object StreamingQueries {
         graft.streaming.DocIngest.ingestOnce(ss, landing, corpus, ledger, ckpt)
         docs.write.mode("append").parquet(landing) // the re-crawl lands
         graft.streaming.DocIngest.ingestOnce(ss, landing, corpus, ledger, ckpt)
-        s.read.parquet(corpus)
+        Sources.parquet(s, corpus)
           .groupBy(col("lang"))
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_chars")).cast("long").as("chars"))
@@ -492,7 +493,7 @@ object StreamingQueries {
           s"st5_stream_join dropped $dropped rows behind the watermark — " +
             "the time-ordered landing guarantees none; a nonzero count " +
             "means file arrival order broke and the sink is incomplete")
-        s.read.parquet(out)
+        Sources.parquet(s, out)
           .orderBy("user_id", "click_id", "purchase_id")
       },
       Some("""SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
@@ -611,7 +612,7 @@ object StreamingQueries {
           .start()
         try q.awaitTermination() finally q.stop()
         requireSingleBatch("st6_stream_session", q)
-        s.read.parquet(out)
+        Sources.parquet(s, out)
           .select(col("user_id"),
             col("session_start").cast("long").as("session_start"),
             col("n_events"))
@@ -699,7 +700,7 @@ object StreamingQueries {
           .select(col("source"), col("n"), col("it.term").as("term"))
         // exact verify pass over the SAME staged token table (one corpus
         // tokenization total, the t-family budget discipline)
-        val exact = s.read.parquet(landing)
+        val exact = Sources.parquet(s, landing)
           .groupBy(col("source"), col("term"))
           .agg(count(lit(1)).as("exact"))
         candidates.join(exact, Seq("source", "term"))

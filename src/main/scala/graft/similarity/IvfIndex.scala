@@ -1,5 +1,6 @@
 package graft.similarity
 
+import graft.sources.Sources
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -37,8 +38,8 @@ object IvfIndex {
   }
 
   def load(spark: SparkSession, dir: String): Model = Model(
-    spark.read.parquet(s"$dir/centroids"),
-    spark.read.parquet(s"$dir/assigned"))
+    Sources.parquet(spark, s"$dir/centroids"),
+    Sources.parquet(spark, s"$dir/assigned"))
 
   /** Train the coarse quantizer and assign every vector to a cell.
     * `emb` must have (vec_id, v: array<double>).

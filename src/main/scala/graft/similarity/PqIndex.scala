@@ -1,5 +1,6 @@
 package graft.similarity
 
+import graft.sources.Sources
 import org.apache.spark.mllib.clustering.GraftKMeans
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -54,10 +55,10 @@ object PqIndex {
   def load(spark: SparkSession, dir: String): Model = {
     // by NAME, not position — a column-order change in the meta parquet
     // must not silently swap m and subDim (ADVICE r15)
-    val meta = spark.read.parquet(s"$dir/meta").head()
+    val meta = Sources.parquet(spark, s"$dir/meta").head()
     Model(meta.getAs[Int]("m"), meta.getAs[Int]("sub_dim"),
-      spark.read.parquet(s"$dir/codebooks"),
-      spark.read.parquet(s"$dir/codes"))
+      Sources.parquet(spark, s"$dir/codebooks"),
+      Sources.parquet(spark, s"$dir/codes"))
   }
 
   private def subvector(v: Column, subIdx: Int, subDim: Int): Column =

@@ -1,6 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Source/sink surface (SURVEY.md §2.1).
@@ -15,8 +18,62 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
+  /** The engine's one parquet reader: the frame `spark.read.parquet(path)`
+    * gives, without the Spark job its schema inference runs. The schema
+    * comes from [[parquetSchema]], one footer read on the driver, and is
+    * handed to the reader, so building the frame launches no job (warm,
+    * 4 cores: an inferred read took ~75 ms and one job, this read 6-9 ms
+    * of which the footer is 0.4-0.7 ms). Footers are read on every call,
+    * with no memo: the file may have been rewritten since (testdata
+    * regenerations, scratch cuts), and `Tables.events` branches on the
+    * `ts` layout read.
+    * Partition columns of a `partitionBy` directory are discovered from
+    * the directory names and appended by Spark, as on an inferred read.
+    *
+    * Every parquet read in the engine goes through here (a source guard in
+    * ParquetReadSpec fails on any other). The reads left to a reader's own
+    * inference are the ones whose point it is: IoQueries' s10 `mergeSchema`
+    * read (schema evolution across files), and its s7 csv, s8 json, s9 orc
+    * and s13 text round-trips.
+    */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(parquetSchema(spark, path)).parquet(path)
+
+  /** The data schema `spark.read.parquet(path)` would infer (a read
+    * appends any partition columns), read on the driver from the footer
+    * of the one file inference would pick:
+    * `_common_metadata`, else `_metadata`, else the first data file in
+    * path order, skipping the names Spark's file index skips. A
+    * missing path raises `PATH_NOT_FOUND` and a path with no such file
+    * `UNABLE_TO_INFER_SCHEMA`, the errors of an inferred read, which the
+    * stream drains rely on to no-op before any producer wrote.
+    */
+  def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val qualified = fs.makeQualified(root)
+    val status =
+      try fs.getFileStatus(qualified)
+      catch {
+        case _: FileNotFoundException =>
+          throw GraftBridge.pathNotFound(qualified.toString)
+      }
+    val files =
+      (if (status.isDirectory) leafFiles(fs, qualified) else Seq(status))
+        .sortBy(_.getPath.toString)
+    val summaries = Seq("_common_metadata", "_metadata")
+    val pick = summaries.flatMap(n => files.find(_.getPath.getName == n))
+      .headOption
+      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+      .getOrElse(throw GraftBridge.unableToInferParquetSchema())
+    GraftBridge.parquetFooterSchema(spark, pick, conf)
+  }
+
+  private def leafFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq
+      .filterNot(st => GraftBridge.hiddenPathName(st.getPath.getName))
+      .flatMap(st => if (st.isDirectory) leafFiles(fs, st.getPath) else Seq(st))
 
   /** Headerless CSV with schema assigned by position (EDA cell 23's
     * pandas `names=` idiom).

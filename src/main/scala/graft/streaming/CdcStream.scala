@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -107,7 +108,7 @@ object CdcStream {
   def applyOnce(spark: SparkSession, srcDir: String, stateDir: String,
       checkpointDir: String): Unit = {
     val schema =
-      try spark.read.parquet(srcDir).schema
+      try Sources.parquetSchema(spark, srcDir)
       catch {
         case e: org.apache.spark.sql.AnalysisException
             if Option(e.getCondition).exists(c =>
@@ -119,7 +120,7 @@ object CdcStream {
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
-        val prev = livePath(s, stateDir).map(s.read.parquet)
+        val prev = livePath(s, stateDir).map(Sources.parquet(s, _))
         val all = prev match {
           case Some(st) => st.unionByName(batch)
           case None => batch
@@ -188,7 +189,7 @@ object CdcStream {
     */
   def currentState(spark: SparkSession, stateDir: String): DataFrame =
     livePath(spark, stateDir) match {
-      case Some(p) => spark.read.parquet(p).filter(col("op") =!= "D")
+      case Some(p) => Sources.parquet(spark, p).filter(col("op") =!= "D")
       case None =>
         import spark.implicits._
         Seq.empty[(Long, Long, Long, String, Long)]

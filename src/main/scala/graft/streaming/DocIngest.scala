@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -41,7 +42,7 @@ object DocIngest {
     // a drain-once job scheduled before any producer wrote must no-op,
     // not crash on schema inference
     val schema =
-      try spark.read.parquet(srcDir).schema
+      try Sources.parquetSchema(spark, srcDir)
       catch {
         case e: org.apache.spark.sql.AnalysisException
             if Option(e.getCondition).exists(c =>
@@ -66,7 +67,7 @@ object DocIngest {
           .getFileSystem(s.sparkContext.hadoopConfiguration).exists(ledgerPath)
         val deduped =
           if (ledgerExists)
-            hashed.join(s.read.parquet(ledgerDir).select("h"), Seq("h"),
+            hashed.join(Sources.parquet(s, ledgerDir).select("h"), Seq("h"),
               "left_anti")
           else hashed
         val fresh = curate(deduped)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.Sources
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
@@ -94,7 +95,7 @@ object EventStream {
       destDir: String, checkpointDir: String, windowLength: String,
       watermark: String): Unit = {
     import org.apache.spark.sql.streaming.Trigger
-    val schema = spark.read.parquet(srcDir).schema
+    val schema = Sources.parquetSchema(spark, srcDir)
     val q = streamingTypeCounts(
         spark.readStream.schema(schema).parquet(srcDir), windowLength, watermark)
       .writeStream.format("parquet")

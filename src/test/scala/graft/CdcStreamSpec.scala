@@ -48,6 +48,23 @@ class CdcStreamSpec extends SparkSpec {
     } finally ops.unpersist()
   }
 
+  test("a drain before any producer wrote is a no-op: missing or empty " +
+      "source dir") {
+    // the reader's PATH_NOT_FOUND and UNABLE_TO_INFER_SCHEMA are the
+    // drain's no-op signals; an empty dir is a producer that made its
+    // landing directory but has not committed a file yet
+    val root = tmp("cdc_none")
+    val empty = s"$root/empty"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(empty))
+    for (src <- Seq(s"$root/never_written", empty)) {
+      val state = s"$root/state_${src.split('/').last}"
+      streaming.CdcStream.applyOnce(spark, src, state, tmp("cdc_ckpt_none"))
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(state)),
+        s"no-op drain of $src must not create state")
+      assert(streaming.CdcStream.currentState(spark, state).isEmpty)
+    }
+  }
+
   test("re-draining the same files is a no-op (idempotent merge)") {
     val src = tmp("cdc_src2"); val state = tmp("cdc_state2")
     val ops = opFeed().limit(200).cache()
