@@ -82,6 +82,12 @@ object Bench {
       for ((t0, s0) <- from; (t1, s1) <- cpuStat() if t1 > t0)
         yield 100.0 * (s1 - s0) / (t1 - t0)
     val stealRuns = scala.collection.mutable.ArrayBuffer.empty[Double]
+    // Janino compiles per suite pass ("codegen_compiles_runs"): with the
+    // codegen cache sized to the registry (Sessions.CodegenCacheEntries),
+    // a second pass compiles only code the first pass did not generate.
+    def compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    val compileRuns = scala.collection.mutable.ArrayBuffer.empty[Long]
 
     val errors = scala.collection.mutable.LinkedHashSet.empty[String]
     val best = scala.collection.mutable.Map.empty[String, Double]
@@ -110,7 +116,9 @@ object Bench {
         .map(v => "\"steal_pct\":" + fmt(v, 2) + ",").getOrElse("")
       val perRun = if (stealRuns.isEmpty) ""
         else "\"steal_pct_runs\":[" + stealRuns.map(fmt(_, 2)).mkString(",") + "],"
-      overall + perRun
+      val compileJson = if (compileRuns.isEmpty) ""
+        else "\"codegen_compiles_runs\":" + compileRuns.mkString("[", ",", "],")
+      overall + perRun + compileJson
     }
     def buildLine(dp: Int, partial: Boolean): String = {
       val results = best.toSeq.sortBy(_._1)
@@ -201,6 +209,7 @@ object Bench {
       // batch) no longer re-overwrite it per construction.
       Scratch.resetCuts()
       val runStat = cpuStat()
+      val runCompiles = compiles
       record("_floor", timed(execute((s, _) => s.range(1000).toDF("id"))))
       for ((name, fn) <- names) {
         val sec =
@@ -213,6 +222,7 @@ object Bench {
         flush(partial = true)
       }
       stealPctSince(runStat).foreach(stealRuns += _)
+      compileRuns += compiles - runCompiles
     }
 
     // Final stdout line: adaptive precision so the driver's 2000-char tail
