@@ -36,9 +36,18 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   *    death now loses at most the query it was inside.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
+  /** The sf dir and local core count, from the environment with Bench's
+    * defaults; the test-scope experiment harness (`graft.AbMain`) reads
+    * the same two values.
+    */
+  private[graft] object Env {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = Env.sfDir
+    val spark = Sessions.local(Env.cpus)
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt)
 
     def execute(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =

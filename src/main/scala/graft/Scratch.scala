@@ -65,7 +65,7 @@ object Scratch {
     * PlanSpec pins it in the consumer plan.
     *
     * `spark.graft.cutMaterialize=false` keeps the live lineage instead —
-    * the differential path CensusCrossoverExperiment uses to measure the
+    * the differential path `graft.AbMain crossover` uses to measure the
     * materialize-vs-recompute crossover at scale (VERDICT r14 #2); results
     * are identical by construction, asserted by CutDifferentialSpec.
     *

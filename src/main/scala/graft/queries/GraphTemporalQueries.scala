@@ -55,7 +55,7 @@ object GraphTemporalQueries {
   private def coocEdgesWeighted(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     Sources.parquet(s, coocEdgeTable.get(s, d))
-  private def coocEdges(s: org.apache.spark.sql.SparkSession,
+  private[graft] def coocEdges(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
     coocEdgesWeighted(s, d).select(col("u"), col("v"))
 
@@ -269,9 +269,11 @@ object GraphTemporalQueries {
           .groupBy(col("o_custkey").as("c"), col("l_suppkey").as("s"))
           .agg(count(lit(1)).as("w")), "ew")
         // r18 cadence: checkpoint every SECOND half-step (h1 + the final
-        // a2), not every half-step — HitsCadenceExperiment measured the
-        // fused form 0.84x at sf0.1 and 0.91x at the x10 fact replica
-        // with bit-identical results (integer arithmetic, total order).
+        // a2), not every half-step — bit-identical results (integer
+        // arithmetic, total order), one parquet cycle fewer. The r18 A/B
+        // read 0.84x / 0.91x at sf0.1 / x10; its re-run with inference-
+        // free checkpoint reads and no timed collect (`graft.AbMain
+        // hits`, 4 cores) reads 0.98-1.02x (BENCH_NOTES).
         // One skipped level is the bound: a1's subtree is inlined twice
         // in h1's plan (rows + broadcast max) where ReusedExchange
         // dedups the shuffle; skipping EVERY checkpoint would nest that

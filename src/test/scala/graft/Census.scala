@@ -157,7 +157,7 @@ object Census {
   /** The 14 round-14 scan-census queries whose shared frames now ride
     * [[Scratch.cut]] (f1's fix was a join-free rewrite, not a cut, so it
     * has no live form to toggle). CutDifferentialSpec asserts the toggle
-    * never changes results; CensusCrossoverExperiment measures the
+    * never changes results; `AbMain crossover` measures the
     * materialize-vs-recompute crossover on exactly this set.
     */
   val censusCuts: Seq[String] = Seq(

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 /** The Scratch.cut toggle changes PLANS, never results: every cut-bearing
   * query must produce identical rows with the shared frame materialized
   * (default) and with the live lineage (`spark.graft.cutMaterialize=false`).
-  * This is the differential that licenses CensusCrossoverExperiment to time
+  * This is the differential that licenses `AbMain crossover` to time
   * the two forms as the same query — the d16 `hashedAnchors` precedent
   * (ExactSubstrSpec).
   *
