@@ -273,7 +273,8 @@ object GraphTemporalQueries {
         // arithmetic, total order), one parquet cycle fewer. The r18 A/B
         // read 0.84x / 0.91x at sf0.1 / x10; its re-run with inference-
         // free checkpoint reads and no timed collect (`graft.AbMain
-        // hits`, 4 cores) reads 0.98-1.02x (BENCH_NOTES).
+        // hits`, 4 cores) reads 0.98-1.03x at x10 and 1.10-1.12x at
+        // sf0.1 against the per-step form (BENCH_NOTES).
         // One skipped level is the bound: a1's subtree is inlined twice
         // in h1's plan (rows + broadcast max) where ReusedExchange
         // dedups the shuffle; skipping EVERY checkpoint would nest that

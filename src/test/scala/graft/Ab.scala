@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 import scala.util.hashing.MurmurHash3
 
 import org.apache.hadoop.fs.{FileUtil, Path}
@@ -19,17 +20,20 @@ import graft.sources.Sources
   *
   *  - A timed run builds each part of a variant and writes it to the
   *    `noop` sink (Bench's protocol). A cell keeps the MIN over runs, and
-  *    each run times every variant of the case in turn, so host drift
-  *    lands on all variants alike. A case's first run on the first input
-  *    also pays its first code generation, so one run per cell biases the
-  *    first input's cells upward; use two or more runs.
+  *    each run times every variant of the case in turn, starting one
+  *    variant later than the run before, so neither host drift nor the
+  *    position in a run favours a variant. A case's first run on the
+  *    first input also pays its first code generation, so one run per
+  *    cell biases the first input's cells upward; use two or more runs.
   *  - A variant's `setup` runs untimed before each of its runs: a conf,
   *    a memo reset, the artifacts a registered query declares.
-  *  - In a cell's first run, right after each part's timed write and
-  *    outside the timed region, the part's rows are hashed as a sorted
-  *    multiset (a toggle may repartition the output). Two variants of one
-  *    case that disagree on one input fail the experiment, naming the
-  *    input and both variants.
+  *  - In every run, right after each part's timed write and outside the
+  *    timed region, the part's rows are hashed as a sorted multiset (a
+  *    toggle may repartition the output). A variant whose hash moves from
+  *    its first run, or that disagrees with the case's first variant on
+  *    one input, fails that cell, naming the input and both variants.
+  *  - A failing cell prints an `ERROR` row and the other cells still run;
+  *    the experiment then throws, naming every failed cell.
   *  - Shuffle-write bytes come from one stage listener, read after
   *    `GraftBridge.drainListeners`, over the timed region only.
   *  - One table: MIN seconds per case, input and variant, its ratio to
@@ -93,32 +97,39 @@ object Ab {
     emit(f"AB ${"case"}%-40s ${"input"}%-8s ${"variant"}%-10s ${"sec"}%8s " +
       f"${"/var0"}%6s ${"/in0"}%6s ${"shuffleMB"}%9s ${"rows"}%8s")
     val firstInput = mutable.Map.empty[(String, String), Double]
-    spark.sparkContext.addSparkListener(listener)
-    try for (c <- cases; (in, dir) <- inputs) {
-      val digests = mutable.Map.empty[String, Seq[(Long, Int)]]
-      // per run, per variant, per part: (seconds, shuffle bytes)
-      val timed = (1 to runs).map(run => c.variants.map { v =>
-        v.setup(spark, dir)
-        val parts = v.parts.map { case (_, b) =>
-          val (b0, t0) = (bytes(), System.nanoTime())
-          val df = b(spark, dir)
-          noop(df)
-          val cell = ((System.nanoTime() - t0) / 1e9, bytes() - b0)
-          // before the next part: a live build may overwrite this one's files
-          (cell, if (run == 1) Some(digest(df)) else None)
-        }
-        if (run == 1) digests(v.name) = parts.flatMap(_._2)
-        parts.map(_._1)
-      })
+    val failed = Seq.newBuilder[String]
+    def measure(c: Case, in: String, dir: String): Unit = {
+      // per run, per variant, per part: ((seconds, shuffle bytes), (rows, hash))
+      val n = c.variants.size
+      val timed = (0 until runs).map { k =>
+        val done = (0 until n).map(j => (j + k) % n).map { i =>
+          val v = c.variants(i)
+          v.setup(spark, dir)
+          i -> v.parts.map { case (_, b) =>
+            val (b0, t0) = (bytes(), System.nanoTime())
+            val df = b(spark, dir)
+            noop(df)
+            val cell = ((System.nanoTime() - t0) / 1e9, bytes() - b0)
+            // before the next part: a live build may overwrite this one's files
+            (cell, digest(df))
+          }
+        }.toMap
+        c.variants.indices.map(done)
+      }
+      // per variant, per run: (rows, hash) per part
+      val digests = c.variants.indices.map(i => timed.map(_(i).map(_._2)))
       val v0 = c.variants.head.name
-      for (v <- c.variants.tail if digests(v.name) != digests(v0))
-        throw new IllegalStateException(s"${c.name} on $in: variant " +
-          s"${v.name} ${digests(v.name)} disagrees with $v0 ${digests(v0)}" +
-          " (rows, hash) per part")
+      for ((v, ds) <- c.variants.zip(digests); (d, r) <- ds.zipWithIndex.tail
+           if d != ds.head)
+        throw new IllegalStateException(s"variant ${v.name} run ${r + 1} $d " +
+          s"differs from its run 1 ${ds.head} (rows, hash) per part")
+      for ((v, ds) <- c.variants.zip(digests).tail if ds.head != digests.head.head)
+        throw new IllegalStateException(s"variant ${v.name} ${ds.head} " +
+          s"disagrees with $v0 ${digests.head.head} (rows, hash) per part")
       val cells = c.variants.zipWithIndex.flatMap { case (v, i) =>
-        val perRun = timed.map(_(i))
+        val perRun = timed.map(_(i).map(_._1))
         val whole = perRun.map(ps => (ps.map(_._1).sum, ps.map(_._2).sum))
-        val rows = digests(v.name).map(_._1)
+        val rows = digests(i).head.map(_._1)
         val parts =
           if (v.parts.size == 1) Nil
           else v.parts.indices.map(p => (s"${c.name}/${v.parts(p)._1}",
@@ -130,15 +141,28 @@ object Ab {
       for ((v, (label, (sec, b), rows)) <- cells) {
         if (in == inputs.head._1) firstInput((label, v)) = sec
         emit(f"AB $label%-40s $in%-8s $v%-10s $sec%8.2f " +
-          f"${sec / byVariant0(label)}%6.2f ${sec / firstInput((label, v))}%6.2f " +
+          f"${sec / byVariant0(label)}%6.2f " +
+          f"${sec / firstInput.getOrElse((label, v), Double.NaN)}%6.2f " +
           f"${b / 1e6}%9.1f $rows%8d")
       }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try for (c <- cases; (in, dir) <- inputs) {
+      try measure(c, in, dir) catch { case NonFatal(e) =>
+        val err = String.valueOf(e).linesIterator.next()
+        emit(f"AB ${c.name}%-40s $in%-8s ERROR $err")
+        failed += s"${c.name} on $in: $err"
+      }
     } finally spark.sparkContext.removeSparkListener(listener)
+    val errors = failed.result()
+    if (errors.nonEmpty) throw new IllegalStateException(
+      s"${errors.size} cell(s) failed:\n${errors.mkString("\n")}")
     lines.result()
   }
 
   /** The x`r` fact replica of `base` in `out`, written once and reused
-    * while its `_OK` marker names the same base and factor.
+    * while its `_OK` marker names the same base and factor; otherwise
+    * `out` is deleted and written again.
     *
     * Each of the five fact tables is replicated `r` times with its key
     * offset per replica: orderkeys in orders AND lineitem (join integrity
@@ -162,7 +186,9 @@ object Ab {
     }
     require(r >= 2, s"a replica needs a factor of at least 2, got $r")
     if (marked) return out
-    fs.delete(ok, false)
+    // start empty: a dim directory copied onto an old one nests inside it,
+    // and Spark would go on reading the old base's files at the top level
+    fs.delete(dst, true)
     val rep = col("rep")
     def stride(df: DataFrame, key: String): Long =
       df.agg(max(col(key))).head().getLong(0) + 1
@@ -220,41 +246,40 @@ object AbMain {
     df.write.mode("overwrite").parquet(p); Sources.parquet(s, p)
   }
 
-  /** g9_hits' half-steps with a checkpoint every `every`-th step (the
-    * final a2 always): 1 is the per-step form, 2 the registered one.
+  /** g9_hits with a checkpoint after every half-step: the per-step form
+    * that the registered one (a checkpoint every 2nd half-step) replaced.
     */
-  private def hits(every: Int): Ab.Build = (s, d) => {
-    val scratch = Scratch.dir(s, s"g9cad$every")
-    def ckpt(df: DataFrame, name: String, step: Int, force: Boolean = false) =
-      if (force || step % every == 0) scratchRead(s, s"$scratch/$name", df) else df
+  private val hitsEvery1: Ab.Build = (s, d) => {
+    val scratch = Scratch.dir(s, "g9every1")
     val ew = scratchRead(s, s"$scratch/ew", Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_suppkey"))
       .join(Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey")),
         col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_custkey").as("c"), col("l_suppkey").as("s"))
       .agg(count(lit(1)).as("w")))
-    def scaled(df: DataFrame, k: String, v: String) =
-      df.crossJoin(broadcast(df.agg(max(col(v)).as("m"))))
-        .select(col(k), expr(s"$v * 1000 div m").as(v))
-    def authStep(hub: DataFrame, step: Int, force: Boolean = false) =
-      ckpt(scaled(ew.join(hub, Seq("c")).groupBy(col("s"))
-        .agg(sum(col("h") * col("w")).as("a")), "s", "a"), s"a$step", step, force)
-    def hubStep(auth: DataFrame, step: Int) =
-      ckpt(scaled(ew.join(auth, Seq("s")).groupBy(col("c"))
-        .agg(sum(col("a") * col("w")).as("h")), "c", "h"), s"h$step", step)
+    def scaled(df: DataFrame, k: String, v: String, step: Int) =
+      scratchRead(s, s"$scratch/$v$step", df.crossJoin(broadcast(
+        df.agg(max(col(v)).as("m")))).select(col(k), expr(s"$v * 1000 div m").as(v)))
+    def authStep(hub: DataFrame, step: Int) = scaled(ew.join(hub, Seq("c"))
+      .groupBy(col("s")).agg(sum(col("h") * col("w")).as("a")), "s", "a", step)
+    def hubStep(auth: DataFrame, step: Int) = scaled(ew.join(auth, Seq("s"))
+      .groupBy(col("c")).agg(sum(col("a") * col("w")).as("h")), "c", "h", step)
     val hub0 = ew.select(col("c")).distinct().withColumn("h", lit(1000L))
-    val a2 = authStep(hubStep(authStep(hub0, 1), 2), 3, force = true)
-    a2.join(ew.groupBy(col("s")).agg(count(lit(1)).as("n_customers")), Seq("s"))
-      .select(col("s"), col("a").as("auth_x1000"), col("n_customers"))
-      .orderBy(desc("auth_x1000"), col("s")).limit(100)
+    authStep(hubStep(authStep(hub0, 1), 1), 2)
+      .join(ew.groupBy(col("s")).agg(count(lit(1)).as("n_customers")), Seq("s"))
+      .join(broadcast(Tables.supplier(s, d).select(col("s_suppkey"), col("s_name"))),
+        col("s") === col("s_suppkey"))
+      .select(col("s_suppkey"), col("s_name"), col("a").as("auth_x1000"),
+        col("n_customers"))
+      .orderBy(desc("auth_x1000"), col("s_suppkey")).limit(100)
   }
 
-  /** g8_kcore's 8 peel rounds (k = 2) over the registered edge artifact,
-    * with a checkpoint every `every`-th round (the last always): 1 is the
-    * registered form.
+  /** g8_kcore's 8 peel rounds (k = 2) over the registered edge artifact
+    * with a checkpoint every 2nd round: the fused form of the registered
+    * one (a checkpoint every round).
     */
-  private def kcore(every: Int): Ab.Build = (s, d) => {
-    val scratch = Scratch.dir(s, s"g8cad$every")
+  private val kcoreEvery2: Ab.Build = (s, d) => {
+    val scratch = Scratch.dir(s, "g8every2")
     val e0 = GraphTemporalQueries.coocEdges(s, d)
     def among(act: DataFrame) = e0
       .join(act.select(col("n").as("u")), Seq("u"), "left_semi")
@@ -267,7 +292,7 @@ object AbMain {
     for (r <- 1 to 8) {
       prev = act
       val next = degrees(among(act)).filter(col("deg") >= 2).select(col("n"))
-      act = if (r % every == 0 || r == 8) scratchRead(s, s"$scratch/a$r", next) else next
+      act = if (r % 2 == 0) scratchRead(s, s"$scratch/a$r", next) else next
     }
     act.join(degrees(among(act)), Seq("n"), "left")
       .crossJoin(broadcast(prev.agg(count(lit(1)).as("np"))))
@@ -277,10 +302,6 @@ object AbMain {
       .orderBy("p_partkey")
   }
 
-  private def cadence(name: String, b: Int => Ab.Build,
-      setup: (SparkSession, String) => Unit = (_, _) => ()) =
-    Seq(Case(name, Seq(1, 2).map(e => Variant(s"every$e", Seq("" -> b(e)), setup))))
-
   private def matLive(names: Seq[String]): Seq[Variant] =
     Seq(Ab.queries("mat", names), Ab.queries("live", names, materialize = false))
 
@@ -289,8 +310,10 @@ object AbMain {
     // bounded-round graph family vs the x10/x40 replicas (BENCH_NOTES
     // "Round 17"); the shared edge artifact is its own case
     "scale" -> ("1,10", _ =>
-      Case("_edges_build", Seq(Variant("build", Seq("" -> GraphTemporalQueries
-        .coocEdges _), (_, _) => GraphTemporalQueries.clearCaches()))) +:
+      // timed alone, as Bench's span: the frame after the build is empty
+      Case("_edges_build", Seq(Variant("build", Seq("" -> ((s, d) => {
+        GraphTemporalQueries.pretrainEdges(s, d); s.emptyDataFrame
+      })), (_, _) => GraphTemporalQueries.clearCaches()))) +:
         Seq("g2_pagerank", "g8_kcore", "g9_hits", "g16_harmonic_centrality")
           .map(n => Case(n, Seq(Ab.queries("registered", Seq(n)))))),
     // each cut query alone, materialized vs live ("Round 15", "Round 16")
@@ -304,10 +327,13 @@ object AbMain {
     "cutshare" -> ("1", names => Seq(Case("cutshare", matLive(names.fold(Seq(
       "c11_quality_survivor", "c17_survivor_quality", "d3_lsh_pairs",
       "d6_dedup_apply", "d7_dup_components"))(_.split(',').toSeq))))),
-    // checkpoint cadence ("Round 18: checkpoint-cadence A/B")
-    "hits" -> ("1,10", _ => cadence("g9_hits_cadence", hits)),
-    "kcore" -> ("1,10", _ => cadence("g8_kcore_cadence", kcore,
-      GraphTemporalQueries.pretrainEdges)),
+    // checkpoint cadence ("Round 18: checkpoint-cadence A/B"): the
+    // registered query first, so the result check ties the copy to it
+    "hits" -> ("1,10", _ => Seq(Case("g9_hits_cadence", Seq(
+      Ab.queries("registered", Seq("g9_hits")), Ab.variant("every1")(hitsEvery1))))),
+    "kcore" -> ("1,10", _ => Seq(Case("g8_kcore_cadence", Seq(
+      Ab.queries("registered", Seq("g8_kcore")),
+      Variant("every2", Seq("" -> kcoreEvery2), GraphTemporalQueries.pretrainEdges))))),
     // d16's anchor self-join keyed on span text vs xxhash64 ("Round 14")
     "anchors" -> ("1", _ => Seq(Case("d16_anchors", Seq(false, true).map(h =>
       Ab.variant(if (h) "hash" else "text")((s, d) =>
