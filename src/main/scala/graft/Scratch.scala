@@ -162,23 +162,27 @@ object Scratch {
         else Array.empty[FileStatus]
       siblings.foreach { st =>
         st.getPath.getName match {
-          case n if n.startsWith("graft_qtmp_") && st.isDirectory =>
-            val pid = n.stripPrefix("graft_qtmp_")
-            val alive = scala.util.Try(
-              ProcessHandle.of(pid.toLong).isPresent).getOrElse(true)
-            // age guard: pid liveness is judged in THIS process's pid
-            // namespace — a sibling created by another namespace sharing
-            // the mount (container + host bind of /dev/shm) would look
-            // dead here while its owner is mid-query. Only reap roots
-            // that are also stale by wall-clock; a live harness run
-            // touches its scratch far more often than hourly.
-            val staleMs = 60L * 60 * 1000
-            val old =
-              System.currentTimeMillis() - st.getModificationTime > staleMs
-            if (!alive && old) fs.delete(st.getPath, true)
+          case n if n.startsWith("graft_qtmp_") &&
+              orphaned(st, n.stripPrefix("graft_qtmp_")) =>
+            fs.delete(st.getPath, true)
           case _ => ()
         }
       }
     }
+  }
+
+  /** A per-pid directory (a scratch root, a bucketed table) whose owning
+    * JVM is gone: its pid is dead AND it is untouched for over an hour.
+    * The age guard is there because pid liveness is judged in THIS
+    * process's pid namespace — a directory created by another namespace
+    * sharing the mount (container + host bind of /dev/shm) would look dead
+    * here while its owner is mid-query; a live run touches its directory
+    * far more often than hourly.
+    */
+  private[graft] def orphaned(st: FileStatus, pid: String): Boolean = {
+    val alive = scala.util.Try(ProcessHandle.of(pid.toLong).isPresent).getOrElse(true)
+    val staleMs = 60L * 60 * 1000
+    st.isDirectory && !alive &&
+      System.currentTimeMillis() - st.getModificationTime > staleMs
   }
 }

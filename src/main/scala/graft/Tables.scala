@@ -89,7 +89,7 @@ object Tables {
   *
   * `needs` lists the [[Artifact]]s the query reads — a fitted model, an
   * index, a landed fixture. Bench builds and times them as their own
-  * spans before timing any query, and QueriesSmokeSpec checks that a
+  * spans before timing any query, and RegistryAuditSpec's walk checks that a
   * construction builds no artifact it does not declare.
   */
 final case class Q(

@@ -734,7 +734,7 @@ object DecisionAudit {
     "e7_pq_adc" -> "PqIndexSpec",
     "e8_ivfpq" -> "PqIndexSpec",
     "e9_ivf_maintain" -> "IvfIndexSpec",
-    "o5_row_sample" -> "QueriesSmokeSpec",
+    "o5_row_sample" -> "RegistryAuditSpec",
     "m4_als_recommend" -> "AlsSpec",
     "m5_als_rmse" -> "AlsSpec",
     "m6_item_similarity" -> "SimilarityScaleSpec",
@@ -744,13 +744,13 @@ object DecisionAudit {
     "m10_cv" -> "SweepsSpec",
     "a17_hll_distinct" -> "GraphTemporalSpec",
     "a18_ddsketch_quantiles" -> "DdSketchSpec",
-    "t5_approx_sketches" -> "QueriesSmokeSpec",
+    "t5_approx_sketches" -> "RegistryAuditSpec",
     "c8_bloom_decontaminate" -> "BloomSpec",
     "t16_bpe_merges" -> "BpeTrainerSpec",
     "t21_bpe_encode" -> "BpeTrainerSpec",
     "t17_heavy_hitters" -> "MisraGriesSpec",
     "o6_user_sample" -> "IndexingSpec",
-    "o8_stratified_sample" -> "QueriesSmokeSpec",
+    "o8_stratified_sample" -> "RegistryAuditSpec",
     "o11_compaction" -> "CompactionSpec",
     "t19_compression_ratio" -> "DeflateLenSpec",
     "m11_rec_coverage" -> "AlsSpec",

@@ -8,8 +8,8 @@ package graft.harness
   * every fit's synchronization barriers. Each task still produces exactly
   * the result it would serially (seeded fits are deterministic given data
   * and partitioning; thread interleaving changes only job ordering), which
-  * QueriesSmokeSpec's double-run check continues to enforce for the sweep
-  * queries. Width stays small: each ALS/LR fit already parallelizes its
+  * the registry walk's double-run check (RegistryAuditSpec) continues to
+  * enforce for the sweep queries. Width stays small: each ALS/LR fit already parallelizes its
   * own stages — fan-out covers barrier idle time, it must not oversubscribe
   * the scheduler.
   */

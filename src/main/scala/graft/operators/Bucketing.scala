@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Bucketed (co-located) joins: both sides pre-hashed into the same bucket
@@ -30,10 +31,10 @@ object Bucketing {
     // in-memory catalog is gone; overwrite then refuses to reuse it —
     // drop both the catalog entry and any stale directory first
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-      .stripPrefix("file:")
-    deleteRecursively(new java.io.File(warehouse, table.toLowerCase))
-    reapDeadPidTables(warehouse)
+    val warehouse = new Path(spark.conf.get("spark.sql.warehouse.dir"))
+    val fs = warehouse.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new Path(warehouse, table.toLowerCase), true)
+    reapDeadPidTables(fs, warehouse)
     df.write.format("parquet")
       .bucketBy(buckets, key)
       .sortBy(key)
@@ -45,32 +46,19 @@ object Bucketing {
     * table names are pid-suffixed (IoQueries.bucketTables) so concurrent
     * JVMs never share a managed location, and this keeps the shared
     * warehouse from accumulating one table set per past run. Same
-    * liveness + staleness double guard as Scratch.sweep: pid liveness is
-    * judged in THIS process's pid namespace, so only reap dirs that are
-    * also old by wall-clock.
+    * dead-pid-and-stale check as Scratch.sweep ([[graft.Scratch.orphaned]]),
+    * through the Hadoop FileSystem, so an HDFS or object-store warehouse
+    * is reaped too.
     */
-  private def reapDeadPidTables(warehouse: String): Unit = {
+  private def reapDeadPidTables(fs: FileSystem, warehouse: Path): Unit = {
     val pidDir = "q_b_.*_p(\\d+)".r
-    val staleMs = 60L * 60 * 1000
-    Option(new java.io.File(warehouse).listFiles())
-      .getOrElse(Array.empty).foreach { f =>
-        f.getName match {
-          case pidDir(pid) if f.isDirectory =>
-            val alive = scala.util.Try(
-              ProcessHandle.of(pid.toLong).isPresent).getOrElse(true)
-            val old = System.currentTimeMillis() - f.lastModified() > staleMs
-            if (!alive && old) deleteRecursively(f)
-          case _ => ()
-        }
+    if (fs.exists(warehouse)) fs.listStatus(warehouse).foreach { st =>
+      st.getPath.getName match {
+        case pidDir(pid) if graft.Scratch.orphaned(st, pid) =>
+          fs.delete(st.getPath, true)
+        case _ => ()
       }
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    // listFiles() is null on IO errors or if the dir vanished after the
-    // isDirectory check — tolerate both, this is best-effort pre-cleaning
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    if (f.exists) { f.delete(); () }
+    }
   }
 
   /** Join two same-bucketed tables on their bucket key. */

@@ -54,7 +54,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // just the Scala column API
     sqlFunctions.foreach { case (name, usage, builder) =>
       ext.injectFunction((FunctionIdentifier(name),
-        // (className, db, NAME, usage, arguments) — see GraftBridge note
+        // 5-arg ctor is (className, db, NAME, usage, arguments) — the
+        // 3-arg one is (className, db, name), which would register the
+        // usage text AS the function name
         new ExpressionInfo(classOf[GraftExtensions].getName, null, name,
           usage, ""),
         builder))
@@ -108,14 +110,4 @@ object GraftExtensions {
         new org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
           args.head,
           new org.apache.spark.sql.catalyst.expressions.XxHash64(Seq(args(1)))) }))
-
-  /** Register every graft SQL function on a live session — for sessions
-    * that were built without `spark.sql.extensions` (attached notebooks,
-    * shared test sessions). Idempotent: re-registration overwrites.
-    */
-  def registerAll(session: org.apache.spark.sql.SparkSession): Unit =
-    sqlFunctions.foreach { case (name, usage, builder) =>
-      org.apache.spark.sql.GraftBridge
-        .registerFunction(session, name, usage, builder)
-    }
 }

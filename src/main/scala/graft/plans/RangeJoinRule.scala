@@ -143,7 +143,9 @@ class RangeJoinRule(session: SparkSession,
     val newPointSide = Project(pointSide.output :+ pAlias, pointSide)
     val loB = bucketOf(lo, w)
     val hiB = bucketOf(hi, w)
-    val seq = Sequence(loB, hiB, None, None)
+    // Sequence is time-zone aware, and unresolved without a zone; the
+    // analyzer would add it, but inside the optimizer nothing does
+    val seq = Sequence(loB, hiB, None, Some(conf.sessionLocalTimeZone))
     // Sequence(lo, hi) is unbounded: ONE outlier-wide interval (or a width
     // set orders of magnitude too small for the data's unit) would expand
     // to up to 2^31 bucket rows and OOM with no indication of why. Guard

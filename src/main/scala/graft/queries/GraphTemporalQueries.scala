@@ -268,25 +268,16 @@ object GraphTemporalQueries {
             col("l_orderkey") === col("o_orderkey"))
           .groupBy(col("o_custkey").as("c"), col("l_suppkey").as("s"))
           .agg(count(lit(1)).as("w")), "ew")
-        // r18 cadence: checkpoint every SECOND half-step (h1 + the final
-        // a2), not every half-step — bit-identical results (integer
-        // arithmetic, total order), one parquet cycle fewer. The r18 A/B
-        // read 0.84x / 0.91x at sf0.1 / x10; its re-run with inference-
-        // free checkpoint reads and no timed collect (`graft.AbMain
-        // hits`, 4 cores) reads 0.98-1.03x at x10 and 1.10-1.12x at
-        // sf0.1 against the per-step form (BENCH_NOTES).
-        // One skipped level is the bound: a1's subtree is inlined twice
-        // in h1's plan (rows + broadcast max) where ReusedExchange
-        // dedups the shuffle; skipping EVERY checkpoint would nest that
-        // doubling per step — the exponential-lineage cliff the per-step
-        // discipline exists to avoid.
-        def authStep(hub: org.apache.spark.sql.DataFrame, r: Int,
-            mat: Boolean) = {
+        // cadence: a checkpoint after every half-step. r18 fused a1 into
+        // h1 (a checkpoint every second half-step, bit-identical results);
+        // re-measured with `graft.AbMain hits` on 4 cores the fused form
+        // loses 1.10-1.12x at sf0.1 and reads 0.98-1.03x at x10, so the
+        // per-step form is back (BENCH_NOTES; 32 cores unmeasured).
+        def authStep(hub: org.apache.spark.sql.DataFrame, r: Int) = {
           val a = ew.join(hub, Seq("c")).groupBy(col("s"))
             .agg(sum(col("h") * col("w")).as("a"))
-          val scored = a.crossJoin(broadcast(a.agg(max(col("a")).as("m"))))
-            .select(col("s"), expr("a * 1000 div m").as("a"))
-          if (mat) ckpt(scored, s"a$r") else scored
+          ckpt(a.crossJoin(broadcast(a.agg(max(col("a")).as("m"))))
+            .select(col("s"), expr("a * 1000 div m").as("a")), s"a$r")
         }
         def hubStep(auth: org.apache.spark.sql.DataFrame, r: Int) = {
           val h = ew.join(auth, Seq("s")).groupBy(col("c"))
@@ -295,8 +286,7 @@ object GraphTemporalQueries {
             .select(col("c"), expr("h * 1000 div m").as("h")), s"h$r")
         }
         val hub0 = ew.select(col("c")).distinct().withColumn("h", lit(1000L))
-        val a2 = authStep(
-          hubStep(authStep(hub0, 1, mat = false), 1), 2, mat = true)
+        val a2 = authStep(hubStep(authStep(hub0, 1), 1), 2)
         val deg = ew.groupBy(col("s")).agg(count(lit(1)).as("n_customers"))
         a2.join(deg, Seq("s"))
           .join(broadcast(supplier(s, d)
@@ -2158,7 +2148,7 @@ object GraphTemporalQueries {
               .cast("long"), lit(3)))
         // the 3 fold fits are independent seeded LR fits — run them
         // concurrently (Par.inParallel): interleaving-invariant results,
-        // double-run-checked by QueriesSmokeSpec
+        // double-run-checked by the registry walk (RegistryAuditSpec)
         val folds = graft.harness.Par.inParallel(0 until 3, width = 3) { i =>
           val model = graft.pipeline.QualityClassifier
             .fit(feats.filter(col("fold") =!= i))
@@ -2236,7 +2226,7 @@ object GraphTemporalQueries {
     // native DataSketches bindings (codegen'd, fixed 2^lgK register
     // state per group — the shuffle carries kilobyte sketches, never the
     // raw ids). Register-max merging is order-independent, so the
-    // estimates are run-to-run deterministic (QueriesSmokeSpec's bar);
+    // estimates are run-to-run deterministic (the registry walk's bar);
     // no DuckDB oracle by design — its HLL is a different sketch impl —
     // the estimate-vs-exact error law is pinned in GraphTemporalSpec.
     Q("a17_hll_distinct",

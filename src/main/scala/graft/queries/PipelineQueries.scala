@@ -163,9 +163,13 @@ object PipelineQueries {
     * pays; d7 reads the identical labels — the u1/u2 change-batch
     * discipline applied to the one remaining doubled iterative build).
     * `cutMaterialize=false` restores the rebuild-per-consumer form;
-    * CutDifferentialSpec holds both forms row-identical.
+    * CutDifferentialSpec holds both forms row-identical. The builder's
+    * pair and label checkpoints live under a dir keyed by the consumer
+    * `tag` and the sf dir (`lpaLabels`' discipline): in the live form a
+    * shared dir let d7's rebuild overwrite the files a c17 frame built
+    * earlier still read.
     */
-  private def dupComponents(s: SparkSession, d: String): DataFrame =
+  private def dupComponents(s: SparkSession, d: String, tag: String): DataFrame =
     graft.Scratch.cutEager(s, s"d7_comps_${graft.Scratch.key(d)}") {
       val bands = lshBandFrame(s, d)
       val pairs = bands.as("x")
@@ -175,7 +179,7 @@ object PipelineQueries {
             && col("x.doc_id") < col("y.doc_id"))
         .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
         .distinct()
-      val scratch = graft.Scratch.dir(s, "dupcomps")
+      val scratch = graft.Scratch.dir(s, s"${tag}_dupcomps_${graft.Scratch.key(d)}")
       pairs.write.mode("overwrite").parquet(s"$scratch/pairs")
       graft.operators.ConnectedComponents
         .propagateMinLabel(Sources.parquet(s, s"$scratch/pairs"), "a_id", "b_id",
@@ -804,7 +808,7 @@ object PipelineQueries {
       //    rounds 1..i-1 — O(i^2) -> O(i). Together: ~17 s -> ~4 s at
       //    sf0.1. This is the production shape for iterating over derived
       //    edges at any scale.
-      (s, d) => dupComponents(s, d).orderBy("doc_id"),
+      (s, d) => dupComponents(s, d, "d7").orderBy("doc_id"),
       Some(s"""WITH RECURSIVE $sqlTok, $sqlSig, $sqlDupComps
               |SELECT doc_id, comp FROM comp ORDER BY doc_id""".stripMargin)),
 
@@ -4168,7 +4172,7 @@ object PipelineQueries {
     // onto documents and one groupBy(comp).
     Q("c17_survivor_quality",
       (s, d) => {
-        dupComponents(s, d)
+        dupComponents(s, d, "c17")
           .join(documents(s, d)
             .select(col("doc_id"), col("n_chars").cast("long").as("nc")),
             Seq("doc_id"))

@@ -18,31 +18,12 @@ object GraftBridge {
       : Seq[catalyst.rules.Rule[catalyst.plans.logical.LogicalPlan]] =
     ext.buildOptimizerRules(session)
 
-  /** Test access: execute an arbitrary logical plan (e.g. one an optimizer
-    * rule just transformed) in a session that doesn't have the extension
-    * installed — the shared test session is built once, so rule EXECUTION
-    * bugs can't be reproduced through it with SQL alone.
+  /** Test access: execute an arbitrary logical plan, e.g. one an optimizer
+    * rule just transformed by hand.
     */
   def ofRows(session: SparkSession,
       plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession], plan)
-
-  /** Register a SQL function on an ALREADY-RUNNING session — the runtime
-    * counterpart of SparkSessionExtensions.injectFunction for sessions
-    * built before the extension existed (tests share one session; a
-    * notebook attaches to a live cluster session the same way).
-    */
-  def registerFunction(session: SparkSession, name: String, usage: String,
-      builder: Seq[Expression] => Expression): Unit =
-    session.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-      .registerFunction(
-        catalyst.FunctionIdentifier(name),
-        // 5-arg ctor is (className, db, NAME, usage, arguments) — the
-        // 3-arg one is (className, db, name), which would register the
-        // usage text AS the function name
-        new catalyst.expressions.ExpressionInfo(
-          classOf[GraftBridge.type].getName, null, name, usage, ""),
-        builder)
 
   /** The Spark schema of one parquet file, made nullable as inference
     * makes it, read from its footer on the driver with the helpers
@@ -90,4 +71,15 @@ object GraftBridge {
     */
   def drainListeners(session: SparkSession): Unit =
     session.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** Run `hook` at JVM exit, before the SparkContext's own stop hook
+    * (Spark's hook manager runs higher priorities first), so a session
+    * that is never stopped explicitly can still clean up through itself.
+    */
+  def beforeContextShutdown(hook: () => Unit): Unit = {
+    import org.apache.spark.util.ShutdownHookManager
+    ShutdownHookManager.addShutdownHook(
+      ShutdownHookManager.SPARK_CONTEXT_SHUTDOWN_PRIORITY + 1)(hook)
+    ()
+  }
 }

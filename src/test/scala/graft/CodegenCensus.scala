@@ -86,6 +86,7 @@ object CodegenCensusMain {
         f"janino_s=$janino%.1f wall_s=$wall%.1f errors=$errors heap_mb=${mb(heap)} " +
         s"metaspace_mb=${metaspace.map(p => mb(p.getUsage.getUsed)).getOrElse(-1L)}")
     }
+    Scratch.sweep(spark)
     spark.stop()
   }
 }

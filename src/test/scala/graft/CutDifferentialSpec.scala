@@ -25,14 +25,8 @@ class CutDifferentialSpec extends SparkSpec {
       SparkEntry.queries(name)(spark, sfDir)
         .collect().map(_.toString).toSeq.sorted
     for (name <- Census.allCuts) {
-      spark.conf.set(Scratch.CutKey, "true")
-      val mat =
-        try results(name)
-        finally spark.conf.set(Scratch.CutKey, "true")
-      spark.conf.set(Scratch.CutKey, "false")
-      val live =
-        try results(name)
-        finally spark.conf.set(Scratch.CutKey, "true")
+      val mat = withConf(Scratch.CutKey, Some("true"))(results(name))
+      val live = withConf(Scratch.CutKey, Some("false"))(results(name))
       assert(mat == live,
         s"$name diverges between materialized and live lineage forms:\n" +
           s"  mat : ${mat.take(3).mkString(" | ")}\n" +
@@ -40,17 +34,27 @@ class CutDifferentialSpec extends SparkSpec {
     }
   }
 
+  test("live d7/c17 frames built before either runs both execute") {
+    // the live form rebuilds the label propagation per consumer; with one
+    // shared checkpoint dir, building d7 overwrote the label files a c17
+    // frame built earlier still read (FAILED_READ_FILE on execution)
+    withConf(Scratch.CutKey, Some("false")) {
+      val frames = Seq("c17_survivor_quality", "d7_dup_components")
+        .map(n => n -> SparkEntry.queries(n)(spark, sfDir))
+      for ((n, df) <- frames) assert(df.collect().nonEmpty, n)
+    }
+  }
+
   test("the toggle actually switches the plan (live form re-scans the fact)") {
     // d13 is the canonical case: 24 documents scans live, 0 in the
     // consumer plan when cut. If this stops discriminating, the toggle
     // is dead and the differential above proves nothing.
-    spark.conf.set(Scratch.CutKey, "false")
-    try {
+    withConf(Scratch.CutKey, Some("false")) {
       val live = SparkEntry.queries("d13_containment")(spark, sfDir)
         .queryExecution.executedPlan.toString
       assert(Census.scans(live).getOrElse("documents", 0) >= 10,
         "live d13 no longer multiplies documents scans — toggle broken?")
-    } finally spark.conf.set(Scratch.CutKey, "true")
+    }
     val mat = SparkEntry.queries("d13_containment")(spark, sfDir)
       .queryExecution.executedPlan.toString
     assert(Census.scans(mat).getOrElse("documents", 0) == 0)

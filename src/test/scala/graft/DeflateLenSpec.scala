@@ -66,7 +66,6 @@ class DeflateLenSpec extends SparkSpec {
   test("null propagates; SQL function matches the column API") {
     val s = spark
     import s.implicits._
-    graft.plans.GraftExtensions.registerAll(spark)
     val df = Seq(Some("abc abc abc"), None).toDF("t")
     val viaCol = df.select(deflateLen(col("t")).as("dl"))
     val viaSql = df.selectExpr("graft_deflate_len(t) AS dl")

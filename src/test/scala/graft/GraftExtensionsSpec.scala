@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{DataFrame, SparkSessionExtensions}
 import org.apache.spark.sql.functions._
 import graft.plans.{GraftExtensions, RewriteMd5Hash32}
 
@@ -11,6 +11,16 @@ class GraftExtensionsSpec extends SparkSpec {
     import s.implicits._
     Seq("hello", "world").toDF("s")
       .select(expr("cast(conv(substring(md5(s), 1, 8), 16, 10) as bigint)").as("h"))
+  }
+
+  /** `df`'s longs as Spark's own md5 computes them: the rewrite is
+    * excluded while `df` is planned and run, and the plan must show it.
+    */
+  private def reference(df: => DataFrame): Seq[Long] = withoutMd5Rewrite {
+    val ref = df
+    val plan = ref.queryExecution.optimizedPlan.toString
+    assert(plan.contains("md5(") && !plan.contains("md5_hash32"), plan)
+    ref.collect().map(_.getLong(0)).toSeq
   }
 
   test("rule rewrites the composed md5 idiom to the native expression") {
@@ -27,10 +37,10 @@ class GraftExtensionsSpec extends SparkSpec {
   test("rewritten plan EXECUTES and matches the composed form") {
     val s = spark
     import s.implicits._
-    val df = Seq("hello", "", "a longer string with spaces", "Ünïcodé ™")
+    def df = Seq("hello", "", "a longer string with spaces", "Ünïcodé ™")
       .toDF("s")
       .selectExpr("cast(conv(substring(md5(s), 1, 8), 16, 10) as bigint) as h")
-    val expected = df.collect().map(_.getLong(0)).toSeq
+    val expected = reference(df)
     val rewritten = RewriteMd5Hash32(df.queryExecution.analyzed)
     assert(rewritten.toString.contains("md5_hash32"), rewritten.toString)
     val got = org.apache.spark.sql.GraftBridge.ofRows(spark, rewritten)
@@ -41,10 +51,10 @@ class GraftExtensionsSpec extends SparkSpec {
   test("rewritten plan executes on a raw binary column too") {
     val s = spark
     import s.implicits._
-    val df = Seq("hello".getBytes("UTF-8"), "world".getBytes("UTF-8"))
+    def df = Seq("hello".getBytes("UTF-8"), "world".getBytes("UTF-8"))
       .toDF("b")
       .selectExpr("cast(conv(substring(md5(b), 1, 8), 16, 10) as bigint) as h")
-    val expected = df.collect().map(_.getLong(0)).toSeq
+    val expected = reference(df)
     val rewritten = RewriteMd5Hash32(df.queryExecution.analyzed)
     assert(rewritten.toString.contains("md5_hash32"), rewritten.toString)
     val got = org.apache.spark.sql.GraftBridge.ofRows(spark, rewritten)
@@ -56,9 +66,8 @@ class GraftExtensionsSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val df = Seq("hello", "", "a longer string with spaces").toDF("s")
-    val composed = df
-      .selectExpr("cast(conv(substring(md5(s), 1, 8), 16, 10) as bigint) as h")
-      .collect().map(_.getLong(0)).toSeq
+    val composed = reference(df
+      .selectExpr("cast(conv(substring(md5(s), 1, 8), 16, 10) as bigint) as h"))
     val native = df.select(graft.functions.TextFunctions.hash32(col("s")))
       .collect().map(_.getLong(0)).toSeq
     assert(composed == native)
@@ -73,7 +82,6 @@ class GraftExtensionsSpec extends SparkSpec {
 
   test("SQL functions: every native expression is callable from SQL text " +
       "and matches its column-API twin") {
-    GraftExtensions.registerAll(spark)
     val s = spark
     import s.implicits._
     Seq("The quick Brown fox jumps over the lazy dog").toDF("t")
@@ -102,7 +110,6 @@ class GraftExtensionsSpec extends SparkSpec {
 
   test("graft_bloom_might_contain: SQL probe (scalar-subquery sketch) " +
       "matches the column-API probe") {
-    GraftExtensions.registerAll(spark)
     val s = spark
     import s.implicits._
     import graft.operators.Bloom
@@ -130,7 +137,6 @@ class GraftExtensionsSpec extends SparkSpec {
     // regression pin: the 3-arg ExpressionInfo ctor is (className, db,
     // name) — using it put the usage text where the name belongs and
     // silently dropped the documentation
-    GraftExtensions.registerAll(spark)
     val desc = spark.sql("DESCRIBE FUNCTION graft_shingles")
       .collect().map(_.getString(0)).mkString("\n")
     assert(desc.contains("Function: graft_shingles"), desc)
@@ -138,7 +144,6 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("SQL functions reject a non-literal width argument") {
-    GraftExtensions.registerAll(spark)
     val e = intercept[Exception] {
       spark.sql("SELECT graft_shingles('a b c', 1 + 1)").collect()
     }

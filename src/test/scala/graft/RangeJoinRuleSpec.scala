@@ -27,83 +27,72 @@ class RangeJoinRuleSpec extends SparkSpec {
   private def sortedRows(df: DataFrame) =
     df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
 
-  private def withWidth[A](w: String)(f: => A): A = {
-    spark.conf.set(rule.widthConf, w)
-    try f finally spark.conf.unset(rule.widthConf)
-  }
+  // manual application with an explicit width: the session's installed
+  // copy of the rule stays off, so `naive` is the un-rewritten reference
+  private def ruleAt(w: Double) = new RangeJoinRule(spark, widthOverride = Some(w))
 
   test("inequality join rewrites to bucketed equi-join with identical results") {
-    withWidth("10.0") {
-      for ((loOp, hiOp) <- Seq[((org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column,
-          (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column)](
-        (_ >= _, _ < _), (_ > _, _ <= _), (_ >= _, _ <= _), (_ > _, _ < _))) {
-        val naive = points.join(intervals,
-          loOp(col("x"), col("lo")) && hiOp(col("x"), col("hi")))
-        val rewritten = rule(naive.queryExecution.analyzed)
-        assert(rewritten.toString.contains("sequence"),
-          "rule did not fire:\n" + rewritten)
-        val df = GraftBridge.ofRows(spark, rewritten)
-        assert(sortedRows(df) == sortedRows(naive),
-          "rewritten results differ from the naive inequality join")
-        val phys = df.queryExecution.executedPlan.toString
-        assert(!phys.contains("BroadcastNestedLoop") && !phys.contains("CartesianProduct"),
-          "rewrite still planned as a nested loop:\n" + phys.take(1000))
-      }
+    for ((loOp, hiOp) <- Seq[((org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column,
+        (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column)](
+      (_ >= _, _ < _), (_ > _, _ <= _), (_ >= _, _ <= _), (_ > _, _ < _))) {
+      val naive = points.join(intervals,
+        loOp(col("x"), col("lo")) && hiOp(col("x"), col("hi")))
+      val rewritten = ruleAt(10.0)(naive.queryExecution.analyzed)
+      assert(rewritten.toString.contains("sequence"),
+        "rule did not fire:\n" + rewritten)
+      val df = GraftBridge.ofRows(spark, rewritten)
+      assert(sortedRows(df) == sortedRows(naive),
+        "rewritten results differ from the naive inequality join")
+      val phys = df.queryExecution.executedPlan.toString
+      assert(!phys.contains("BroadcastNestedLoop") && !phys.contains("CartesianProduct"),
+        "rewrite still planned as a nested loop:\n" + phys.take(1000))
     }
   }
 
   test("rewrite also fires when the interval side is on the left") {
-    withWidth("10.0") {
-      val naive = intervals.join(points,
-        col("x") >= col("lo") && col("x") < col("hi"))
-      val rewritten = rule(naive.queryExecution.analyzed)
-      assert(rewritten.toString.contains("sequence"), rewritten.toString)
-      assert(sortedRows(GraftBridge.ofRows(spark, rewritten)) == sortedRows(naive))
-    }
+    val naive = intervals.join(points,
+      col("x") >= col("lo") && col("x") < col("hi"))
+    val rewritten = ruleAt(10.0)(naive.queryExecution.analyzed)
+    assert(rewritten.toString.contains("sequence"), rewritten.toString)
+    assert(sortedRows(GraftBridge.ofRows(spark, rewritten)) == sortedRows(naive))
   }
 
   test("timestamp ranges bucket in seconds (event-in-validity-window join)") {
-    withWidth("600.0") { // 10-minute buckets
-      val s = spark
-      import s.implicits._
-      def ts(m: Int) = new java.sql.Timestamp(m * 60_000L)
-      val evs = Seq((1L, ts(5)), (2L, ts(30)), (3L, ts(59)), (4L, ts(60)),
-        (5L, ts(200))).toDF("eid", "at")
-      val windows = Seq((10L, ts(0), ts(60)), (11L, ts(45), ts(90)),
-        (12L, ts(150), ts(240))).toDF("wid", "w_from", "w_to")
-      val naive = evs.join(windows,
-        col("at") >= col("w_from") && col("at") < col("w_to"))
-      val rewritten = rule(naive.queryExecution.analyzed)
-      assert(rewritten.toString.contains("sequence"), rewritten.toString)
-      assert(sortedRows(GraftBridge.ofRows(spark, rewritten)) == sortedRows(naive))
-    }
+    val s = spark
+    import s.implicits._
+    def ts(m: Int) = new java.sql.Timestamp(m * 60_000L)
+    val evs = Seq((1L, ts(5)), (2L, ts(30)), (3L, ts(59)), (4L, ts(60)),
+      (5L, ts(200))).toDF("eid", "at")
+    val windows = Seq((10L, ts(0), ts(60)), (11L, ts(45), ts(90)),
+      (12L, ts(150), ts(240))).toDF("wid", "w_from", "w_to")
+    val naive = evs.join(windows,
+      col("at") >= col("w_from") && col("at") < col("w_to"))
+    val rewritten = ruleAt(600.0)(naive.queryExecution.analyzed) // 10-min buckets
+    assert(rewritten.toString.contains("sequence"), rewritten.toString)
+    assert(sortedRows(GraftBridge.ofRows(spark, rewritten)) == sortedRows(naive))
   }
 
   test("mixed point/bound families are left alone (units would disagree)") {
-    withWidth("10.0") {
-      val s = spark
-      import s.implicits._
-      val pts = Seq((1L, new java.sql.Timestamp(60_000L))).toDF("pid", "at")
-      val iv = Seq((10L, 0.0, 100.0)).toDF("iid", "lo", "hi")
-      // analyzer casts make this legal SQL; the rule must not bucket a
-      // timestamp point against numeric bounds
-      val naive = pts.join(iv,
-        col("at").cast("double") >= col("lo") && col("at").cast("double") < col("hi"))
-      // the point is a cast expression, not a bare attribute -> untouched
-      assert(rule(naive.queryExecution.analyzed).toString
-        == naive.queryExecution.analyzed.toString)
-    }
+    val s = spark
+    import s.implicits._
+    val pts = Seq((1L, new java.sql.Timestamp(60_000L))).toDF("pid", "at")
+    val iv = Seq((10L, 0.0, 100.0)).toDF("iid", "lo", "hi")
+    // analyzer casts make this legal SQL; the rule must not bucket a
+    // timestamp point against numeric bounds
+    val naive = pts.join(iv,
+      col("at").cast("double") >= col("lo") && col("at").cast("double") < col("hi"))
+    // the point is a cast expression, not a bare attribute -> untouched
+    assert(ruleAt(10.0)(naive.queryExecution.analyzed).toString
+      == naive.queryExecution.analyzed.toString)
   }
 
   test("idempotent: the rewritten join has an equi conjunct, so a second " +
       "pass leaves it unchanged") {
-    withWidth("10.0") {
-      val naive = points.join(intervals,
-        col("x") >= col("lo") && col("x") < col("hi"))
-      val once = rule(naive.queryExecution.analyzed)
-      val twice = rule(once)
-      assert(once.toString == twice.toString)
-    }
+    val naive = points.join(intervals,
+      col("x") >= col("lo") && col("x") < col("hi"))
+    val once = ruleAt(10.0)(naive.queryExecution.analyzed)
+    val twice = ruleAt(10.0)(once)
+    assert(once.toString == twice.toString)
   }
 
   test("guards: no conf, equi conjunct present, or extra conjuncts -> untouched") {
@@ -112,18 +101,16 @@ class RangeJoinRuleSpec extends SparkSpec {
       col("x") >= col("lo") && col("x") < col("hi"))
     assert(rule(naive.queryExecution.analyzed).toString
       == naive.queryExecution.analyzed.toString)
-    withWidth("10.0") {
-      // an equi conjunct links the sides: hash join handles it already
-      val equi = points.join(intervals,
-        col("pid") === col("iid") && col("x") >= col("lo") && col("x") < col("hi"))
-      assert(rule(equi.queryExecution.analyzed).toString
-        == equi.queryExecution.analyzed.toString)
-      // three range conjuncts: out of the rule's declared scope
-      val three = points.join(intervals,
-        col("x") >= col("lo") && col("x") < col("hi") && col("x") < lit(100.0))
-      assert(rule(three.queryExecution.analyzed).toString
-        == three.queryExecution.analyzed.toString)
-    }
+    // an equi conjunct links the sides: hash join handles it already
+    val equi = points.join(intervals,
+      col("pid") === col("iid") && col("x") >= col("lo") && col("x") < col("hi"))
+    assert(ruleAt(10.0)(equi.queryExecution.analyzed).toString
+      == equi.queryExecution.analyzed.toString)
+    // three range conjuncts: out of the rule's declared scope
+    val three = points.join(intervals,
+      col("x") >= col("lo") && col("x") < col("hi") && col("x") < lit(100.0))
+    assert(ruleAt(10.0)(three.queryExecution.analyzed).toString
+      == three.queryExecution.analyzed.toString)
   }
 
   test("extension installs the rule") {
@@ -131,6 +118,21 @@ class RangeJoinRuleSpec extends SparkSpec {
     new graft.plans.GraftExtensions().apply(ext)
     val rules = GraftBridge.optimizerRules(ext, spark)
     assert(rules.exists(_.isInstanceOf[RangeJoinRule]))
+  }
+
+  test("installed in the session, the conf turns the rewrite on for any " +
+      "query, with the naive join's results") {
+    val naive = points.join(intervals,
+      col("x") >= col("lo") && col("x") < col("hi"))
+    val expected = sortedRows(naive)
+    val df = withConf(rule.widthConf, Some("10.0")) {
+      val df = points.join(intervals,
+        col("x") >= col("lo") && col("x") < col("hi"))
+      val plan = df.queryExecution.optimizedPlan.toString
+      assert(plan.contains("sequence"), "installed rule did not fire:\n" + plan)
+      df
+    }
+    assert(sortedRows(df) == expected)
   }
 
   test("explicit width override fires without touching session conf " +

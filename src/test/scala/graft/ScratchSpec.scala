@@ -6,12 +6,12 @@ package graft
 class ScratchSpec extends SparkSpec {
 
   test("scratch dir defaults and follows the session conf") {
-    spark.conf.unset(Scratch.ConfKey)
-    assert(Scratch.dir(spark, "x") == s"${Scratch.Default}/x")
-    spark.conf.set(Scratch.ConfKey, "/root/repo/target/test-tmp/alt-scratch")
-    try assert(Scratch.dir(spark, "x")
-      == "/root/repo/target/test-tmp/alt-scratch/x")
-    finally spark.conf.unset(Scratch.ConfKey)
+    withConf(Scratch.ConfKey, None) {
+      assert(Scratch.dir(spark, "x") == s"${Scratch.Default}/x")
+    }
+    withConf(Scratch.ConfKey, Some("/root/repo/target/test-tmp/alt-scratch")) {
+      assert(Scratch.dir(spark, "x") == "/root/repo/target/test-tmp/alt-scratch/x")
+    }
   }
 
   test("default is disk-backed; tmpfs is strictly an opt-in with headroom") {
@@ -25,8 +25,7 @@ class ScratchSpec extends SparkSpec {
 
   test("sweep removes the per-run scratch tree, and only a graft_qtmp one") {
     val root = "/root/repo/target/test-tmp/sweep-check/graft_qtmp"
-    spark.conf.set(Scratch.ConfKey, root)
-    try {
+    withConf(Scratch.ConfKey, Some(root)) {
       val probe = new java.io.File(s"$root/some_query/part-0")
       probe.getParentFile.mkdirs()
       java.nio.file.Files.writeString(probe.toPath, "ephemeral")
@@ -40,7 +39,7 @@ class ScratchSpec extends SparkSpec {
       Scratch.sweep(spark)
       assert(new java.io.File(s"$guarded/keep").exists(),
         "sweep must refuse roots that are not a graft_qtmp leaf")
-    } finally spark.conf.unset(Scratch.ConfKey)
+    }
   }
 
   test("scratch root is per-process; sweep reaps only dead-pid siblings") {
@@ -64,8 +63,7 @@ class ScratchSpec extends SparkSpec {
     // BOTH dead-pid and stale-mtime
     new java.io.File(dead).setLastModified(
       System.currentTimeMillis() - 2L * 60 * 60 * 1000)
-    spark.conf.set(Scratch.ConfKey, mine)
-    try {
+    try withConf(Scratch.ConfKey, Some(mine)) {
       Scratch.sweep(spark)
       assert(!new java.io.File(mine).exists(), "own root must be swept")
       assert(new java.io.File(alive).exists(),
@@ -75,7 +73,6 @@ class ScratchSpec extends SparkSpec {
       assert(new java.io.File(deadFresh).exists(),
         "a FRESH dead-pid sibling must survive (cross-namespace guard)")
     } finally {
-      spark.conf.unset(Scratch.ConfKey)
       Seq(alive, dead, deadFresh).foreach(p => {
         def rm(f: java.io.File): Unit = {
           if (f.isDirectory)
@@ -98,16 +95,12 @@ class ScratchSpec extends SparkSpec {
     Seq(new java.io.File(mine, "q/part-0"), new java.io.File(dead, "x"), keep)
       .foreach(_.mkdirs())
     dead.setLastModified(System.currentTimeMillis() - 2L * 60 * 60 * 1000)
-    spark.conf.set(Scratch.ConfKey, s"file:$mine")
-    try {
+    try withConf(Scratch.ConfKey, Some(s"file:$mine")) {
       Scratch.sweep(spark)
       assert(!mine.exists(), "a file: URI root must be swept")
       assert(!dead.exists(), "its stale dead-pid sibling must be reaped")
       assert(keep.exists(), "a non-graft_qtmp sibling must be left alone")
-    } finally {
-      spark.conf.unset(Scratch.ConfKey)
-      Seq(keep, base).foreach(_.delete())
-    }
+    } finally Seq(keep, base).foreach(_.delete())
   }
 
   test("cut memoizes its write: a second construction under the same name " +
@@ -119,9 +112,8 @@ class ScratchSpec extends SparkSpec {
     // read the identical files.
     import spark.implicits._
     val root = "/root/repo/target/test-tmp/cut-memo/graft_qtmp"
-    spark.conf.set(Scratch.ConfKey, root)
     Scratch.resetCuts()
-    try {
+    try withConf(Scratch.ConfKey, Some(root)) {
       def frame = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
       val first = Scratch.cut(spark, "memo_probe")(frame)
       def listing = new java.io.File(s"$root/memo_probe")
@@ -138,24 +130,20 @@ class ScratchSpec extends SparkSpec {
       assert(listing != before,
         "after resetCuts the write must happen again (fresh part files)")
       // the live-lineage toggle bypasses the memo entirely
-      spark.conf.set(Scratch.CutKey, "false")
-      try assert(Scratch.cut(spark, "memo_other")(frame).inputFiles.isEmpty
-        || !new java.io.File(s"$root/memo_other").exists(),
-        "cutMaterialize=false must not write scratch")
-      finally spark.conf.set(Scratch.CutKey, "true")
+      withConf(Scratch.CutKey, Some("false")) {
+        assert(Scratch.cut(spark, "memo_other")(frame).inputFiles.isEmpty
+          || !new java.io.File(s"$root/memo_other").exists(),
+          "cutMaterialize=false must not write scratch")
+      }
       Scratch.sweep(spark)
       assert(!new java.io.File(root).exists())
-    } finally {
-      spark.conf.unset(Scratch.ConfKey)
-      Scratch.resetCuts() // memoized paths under the test root are gone
-    }
+    } finally Scratch.resetCuts() // memoized paths under the test root are gone
   }
 
   test("sweep invalidates every artifact memo, so consumers rebuild " +
       "instead of reading deleted files") {
     // the round-10 t20 class: a memo that outlives a sweep hands the next
     // consumer a path whose files are gone
-    spark.conf.unset(Scratch.ConfKey)
     graft.queries.GraphTemporalQueries.pretrainEdges(spark, sfDir)
     Scratch.sweep(spark)
     SparkEntry.queries("g3_triangle_count")(spark, sfDir).collect()
@@ -166,10 +154,9 @@ class ScratchSpec extends SparkSpec {
 
   test("an IO round-trip query lands in the configured scratch dir") {
     val alt = "/root/repo/target/test-tmp/scratch-redirect"
-    spark.conf.set(Scratch.ConfKey, alt)
-    try {
+    withConf(Scratch.ConfKey, Some(alt)) {
       SparkEntry.queries("s2_parquet_roundtrip")(spark, sfDir).collect()
       assert(new java.io.File(s"$alt/s2_orders").exists())
-    } finally spark.conf.unset(Scratch.ConfKey)
+    }
   }
 }

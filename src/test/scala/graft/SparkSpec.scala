@@ -1,26 +1,52 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM via Test/fork). */
+/** Shared local session for all suites (one JVM via Test/fork): the
+  * engine's own [[Sessions.local]], so tests run the conf that Bench and
+  * perfbench run. Its scratch root is swept once when the JVM ends, before
+  * Spark's own shutdown hook stops the context.
+  */
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        Sessions.CodegenCacheEntries.toLong)
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = Sessions.local("4")
+    GraftBridge.beforeContextShutdown { () =>
+      if (!s.sparkContext.isStopped) Scratch.sweep(s)
+    }
     s
   }
+
+  val sfDir = "/root/testdata/sf0.001"
 }
 
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
-  val sfDir = "/root/testdata/sf0.001"
+  val sfDir: String = SparkSpec.sfDir
+
+  /** Runs `f` with session conf `key` set to `value` (unset for None),
+    * then restores the session's previous setting.
+    */
+  def withConf[T](key: String, value: Option[String])(f: => T): T = {
+    def put(v: Option[String]): Unit = v match {
+      case Some(x) => spark.conf.set(key, x)
+      case None => spark.conf.unset(key)
+    }
+    val prev = spark.conf.getOption(key)
+    put(value)
+    try f finally put(prev)
+  }
+
+  /** Runs `f` with the engine's md5 rewrite excluded from the optimizer,
+    * so a composed-idiom reference is computed by Spark's own `md5`, not by
+    * the native expression it is compared against. Local-relation folding
+    * is excluded too: it evaluates a local input's projection before any
+    * rule sees it, and the optimized plan would no longer show which md5
+    * ran.
+    */
+  def withoutMd5Rewrite[T](f: => T): T =
+    withConf("spark.sql.optimizer.excludedRules", Some(Seq(
+      graft.plans.RewriteMd5Hash32.ruleName,
+      org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation.ruleName)
+      .mkString(",")))(f)
 }

@@ -13,8 +13,7 @@ class StreamLandingSpec extends SparkSpec {
 
   test("a file: URI landing derives width 8 and its mod times ascend") {
     val base = new java.io.File("target/test-tmp/landing-uri").getAbsoluteFile
-    spark.conf.set(Scratch.ConfKey, s"file:$base/graft_qtmp")
-    try {
+    try withConf(Scratch.ConfKey, Some(s"file:$base/graft_qtmp")) {
       val landing = StreamingQueries.landedOnce.get(spark, sfDir)
       assert(landing.startsWith("file:"))
       val ss = StreamingQueries.streamSession(spark, landing)
@@ -27,7 +26,6 @@ class StreamLandingSpec extends SparkSpec {
       assert(times.zip(times.tail).forall { case (a, b) => a < b },
         s"mod times must ascend in name order: $times")
     } finally {
-      spark.conf.unset(Scratch.ConfKey)
       StreamingQueries.clearCaches()
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
