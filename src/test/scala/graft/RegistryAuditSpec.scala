@@ -11,7 +11,7 @@ import scala.util.Try
   * that same frame run. Each check names the offending query and each has
   * a planted control proving it fires.
   *
-  *   - Runs (the driver's correctness gate hash-compares a single run, and
+  *   - Runs (the benchmark's correctness gate hash-compares a single run, and
   *     the rows-only queries are graded on their recorded output): every
   *     query runs at sf0.001, and runs twice to the same rows, except the
   *     model fits in [[Census.expensiveFit]]; and it builds no

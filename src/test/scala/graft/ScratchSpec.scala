@@ -9,8 +9,9 @@ class ScratchSpec extends SparkSpec {
     withConf(Scratch.ConfKey, None) {
       assert(Scratch.dir(spark, "x") == s"${Scratch.Default}/x")
     }
-    withConf(Scratch.ConfKey, Some("/root/repo/target/test-tmp/alt-scratch")) {
-      assert(Scratch.dir(spark, "x") == "/root/repo/target/test-tmp/alt-scratch/x")
+    val alt = new java.io.File("target/test-tmp/alt-scratch").getAbsolutePath
+    withConf(Scratch.ConfKey, Some(alt)) {
+      assert(Scratch.dir(spark, "x") == s"$alt/x")
     }
   }
 
