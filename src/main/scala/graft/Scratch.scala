@@ -18,6 +18,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * headroom. On a cluster, set the conf to executor-local NVMe or the
   * job's object-store staging prefix.
   *
+  * Two ways to cut a frame's lineage at scratch parquet, one per job: a
+  * per-build checkpoint (an iterative round, a frame one build scans
+  * several times) is `Sources.checkpoint`, written on every build; a
+  * frame shared once per run across builds and queries is [[cut]],
+  * written once per cut name.
+  *
   * Lifecycle: scratch content is per-run ephemera by contract. The harness
   * mains (Bench, Verify) call [[sweep]] on exit so repeated driver runs
   * can't accumulate — RAM-backed tmpfs especially must not retain stale
@@ -81,6 +87,15 @@ object Scratch {
     * (which deletes the files) and [[resetCuts]] (the crossover
     * experiment's per-measurement hook, so a timed materialized run
     * always pays its write) clear it.
+    *
+    * The producer is BY-NAME, so once the cut is written this run a later
+    * consumer never builds it at all. That matters where CONSTRUCTION is
+    * itself the expensive work (an iterative build that writes its own
+    * round checkpoints, a driver-synchronized trainer): the d7/c17 shape,
+    * where both queries would otherwise rebuild the same 10-round label
+    * propagation and the memo would only dedupe the final write.
+    * `cutMaterialize=false` builds the producer on every call, the live
+    * form CutDifferentialSpec proves result-identical.
     */
   private val written = Artifact.cuts()
 
@@ -98,34 +113,14 @@ object Scratch {
     new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
   def onSweep(hook: () => Unit): Unit = { sweepHooks.add(hook); () }
 
-  def cut(s: SparkSession, name: String)(df: DataFrame): DataFrame =
+  def cut(s: SparkSession, name: String)(df: => DataFrame): DataFrame =
     if (s.conf.get(CutKey, "true").toBoolean) {
       val p = dir(s, name)
       // a concurrent second constructor (harness/Par) blocks until the
       // write finishes instead of reading a partial dir
-      written.once(s, name)(df.write.mode("overwrite").parquet(p))
+      written.once(s, name)(Sources.writeParquet(df, p))
       Sources.parquet(s, p)
     } else df
-
-  /** [[cut]] for producers whose CONSTRUCTION is itself the expensive work
-    * (an iterative build that writes its own round checkpoints, a driver-
-    * synchronized trainer): the producer is BY-NAME, so once the cut is
-    * written this run, a second consumer never evaluates it at all —
-    * `cut`'s by-value parameter would re-run an eager builder before the
-    * memo could help (the d7/c17 shape: both queries rebuilt the same
-    * 10-round label propagation because the memo only deduped the final
-    * WRITE, not the build). Same memo map, same per-run reset discipline
-    * (Bench's resetCuts makes every suite run pay each build exactly
-    * once), same `cutMaterialize=false` escape hatch (live form = every
-    * consumer constructs its own build — the pre-r17 behavior, which
-    * CutDifferentialSpec proves result-identical).
-    */
-  def cutEager(s: SparkSession, name: String)(mk: => DataFrame): DataFrame =
-    if (s.conf.get(CutKey, "true").toBoolean) {
-      val p = dir(s, name)
-      written.once(s, name)(mk.write.mode("overwrite").parquet(p))
-      Sources.parquet(s, p)
-    } else mk
 
   /** Collision-resistant per-dataset key for scratch stores that WIPE
     * before publishing (u5/u6/u7/u9): the sanitized last path segment

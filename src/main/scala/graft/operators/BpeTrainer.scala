@@ -57,14 +57,6 @@ object BpeTrainer {
       s"merges=$merges exceeds MaxTrainRounds=$MaxTrainRounds: one driver " +
         "round-trip per merge is the algorithm's shape, but at vocabulary " +
         "scale you want a batched-merge trainer, not more rounds of this one")
-    val spark = wordCounts.sparkSession
-    def ckpt(df: DataFrame, round: Int): DataFrame = checkpointDir match {
-      case Some(dir) =>
-        val p = s"$dir/iter_$round"
-        df.write.mode("overwrite").parquet(p)
-        Sources.parquet(spark, p)
-      case None => df
-    }
     var syms = wordCounts.select(
       col(cntCol).cast("long").as("cnt"),
       // split("abc", "") -> ["a","b","c"]: the initial character alphabet
@@ -83,8 +75,10 @@ object BpeTrainer {
       else {
         val (a, b, n) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         learned += Merge(step, a, b, a + b, n)
-        syms = ckpt(syms.select(col("cnt"),
-          applyMerge(col("syms"), a, b).as("syms")), step)
+        val merged = syms.select(col("cnt"),
+          applyMerge(col("syms"), a, b).as("syms"))
+        syms = checkpointDir.fold(merged)(dir =>
+          Sources.checkpoint(merged, s"$dir/iter_$step"))
         step += 1
       }
     }
@@ -135,14 +129,6 @@ object BpeTrainer {
         "applied as one fused projection")
     require(merges <= MaxTrainRounds * batch,
       s"merges=$merges exceeds MaxTrainRounds*batch")
-    val spark = wordCounts.sparkSession
-    def ckpt(df: DataFrame, round: Int): DataFrame = checkpointDir match {
-      case Some(dir) =>
-        val p = s"$dir/batch_iter_$round"
-        df.write.mode("overwrite").parquet(p)
-        Sources.parquet(spark, p)
-      case None => df
-    }
     var syms = wordCounts.select(
       col(cntCol).cast("long").as("cnt"),
       split(col(wordCol), "").as("syms"))
@@ -189,10 +175,10 @@ object BpeTrainer {
         val chosen = admitted.result()
         learned ++= chosen
         step += chosen.size
-        syms = ckpt(
-          chosen.foldLeft(syms)((df, mg) => df.select(col("cnt"),
-            applyMerge(col("syms"), mg.left, mg.right).as("syms"))),
-          rounds)
+        val merged = chosen.foldLeft(syms)((df, mg) => df.select(col("cnt"),
+          applyMerge(col("syms"), mg.left, mg.right).as("syms")))
+        syms = checkpointDir.fold(merged)(dir =>
+          Sources.checkpoint(merged, s"$dir/batch_iter_$rounds"))
       }
     }
     val result = learned.result()

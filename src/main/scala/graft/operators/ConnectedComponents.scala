@@ -35,14 +35,6 @@ object ConnectedComponents {
     */
   def propagateMinLabel(edges: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 20, checkpointDir: Option[String] = None): DataFrame = {
-    val spark = edges.sparkSession
-    def ckpt(df: DataFrame, round: Int): DataFrame = checkpointDir match {
-      case Some(dir) =>
-        val p = s"$dir/iter_$round"
-        df.write.mode("overwrite").parquet(p)
-        Sources.parquet(spark, p)
-      case None => df
-    }
     val sym = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
     var labels = sym.select(col("src").as("node")).distinct()
@@ -57,10 +49,12 @@ object ConnectedComponents {
       // keep old and new label side by side so the convergence check can
       // run AFTER the checkpoint (off the materialized files, not a
       // second execution of the join)
-      val next = ckpt(labels
+      val joined = labels
         .join(neighborMin, Seq("node"), "left")
         .select(col("node"), col("comp"),
-          least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp2")), i)
+          least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp2"))
+      val next = checkpointDir.fold(joined)(dir =>
+        Sources.checkpoint(joined, s"$dir/iter_$i"))
       converged = next.filter(col("comp2") < col("comp")).isEmpty
       labels = next.select(col("node"), col("comp2").as("comp"))
       i += 1

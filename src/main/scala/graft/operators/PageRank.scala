@@ -38,34 +38,24 @@ object PageRank {
       iters: Int = 8, damping: Double = 0.85,
       checkpointDir: Option[String] = None): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val spark = edges.sparkSession
-    def ckpt(df: DataFrame, round: Int): DataFrame = checkpointDir match {
-      case Some(dir) =>
-        val p = s"$dir/iter_$round"
-        df.write.mode("overwrite").parquet(p)
-        Sources.parquet(spark, p)
-      case None => df
-    }
+    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+      col(weightCol).cast("double").as("w"))
     // materialize the loop invariants once when storage is available:
     // without this, every iteration's lineage re-runs the node distinct
     // and the out-weight aggregate — wasted stages that multiply by the
     // iteration count (the same rule as d7's edge materialization)
-    def stable(df: DataFrame, name: String): DataFrame = checkpointDir match {
-      case Some(dir) =>
-        df.write.mode("overwrite").parquet(s"$dir/$name")
-        Sources.parquet(spark, s"$dir/$name")
-      case None => df
-    }
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
-      col(weightCol).cast("double").as("w"))
-    val nodes = stable(e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct(), "nodes")
+    val allNodes = e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct()
+    val nodes = checkpointDir.fold(allNodes)(dir =>
+      Sources.checkpoint(allNodes, s"$dir/nodes"))
     // scalar only — the one driver-side value an iterative distributed
     // loop legitimately needs (same contract as ConnectedComponents'
     // convergence flag)
     val n = nodes.count()
     val outw = e.groupBy("src").agg(sum(col("w")).as("ow"))
-    val ew = stable(e.join(outw, "src"), "ew")
+    val weighted = e.join(outw, "src")
+    val ew = checkpointDir.fold(weighted)(dir =>
+      Sources.checkpoint(weighted, s"$dir/ew"))
     val teleport = 1.0 - damping
     var ranks = nodes.withColumn("rank", lit(1.0 / n))
     for (i <- 0 until iters) {
@@ -73,10 +63,12 @@ object PageRank {
         .join(ranks.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst").as("node"))
         .agg(sum(col("rank") * col("w") / col("ow")).as("in_mass"))
-      ranks = ckpt(nodes.join(contrib, Seq("node"), "left")
+      val next = nodes.join(contrib, Seq("node"), "left")
         .select(col("node"),
           (lit(teleport / n) + lit(damping) * coalesce(col("in_mass"), lit(0.0)))
-            .as("rank")), i)
+            .as("rank"))
+      ranks = checkpointDir.fold(next)(dir =>
+        Sources.checkpoint(next, s"$dir/iter_$i"))
     }
     ranks
   }

@@ -20,7 +20,7 @@ object AdvancedQueries {
     * (the encoder replays it over the vocabulary). ONE definition — the
     * corpora, merge budget, and tie-break contract can't drift between the
     * two halves of the tokenizer pipeline — and the trained table rides
-    * [[graft.Scratch.cutEager]] (r17): training is a driver-synchronized
+    * [[graft.Scratch.cut]] (r17): training is a driver-synchronized
     * EAGER build (6 argmax round-trips + checkpoint writes), so only the
     * by-name cut stops the second consumer from re-training the identical
     * table; each suite run pays training exactly once (t16 sorts first and
@@ -29,7 +29,7 @@ object AdvancedQueries {
     */
   private def bpe6Df(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    graft.Scratch.cutEager(s, s"bpe6_${graft.Scratch.key(d)}") {
+    graft.Scratch.cut(s, s"bpe6_${graft.Scratch.key(d)}") {
       import s.implicits._
       val wc = documents(s, d)
         .select(explode(tokens(col("text"))).as("word"))
@@ -794,12 +794,9 @@ object AdvancedQueries {
         // EXACTLY once per word — left lazy, CollapseProject re-inlines
         // the fold into every downstream reference (n_p, good, and the
         // broadcast build side), the t6 hazard class
-        val store = graft.Scratch.dir(s, "t21_vocab")
-        wc.select(col("word"),
+        val vocab = Sources.checkpoint(wc.select(col("word"),
           filter(graft.operators.BpeTrainer.encode(col("word"), table),
-            p => p =!= "").as("pieces"))
-          .write.mode("overwrite").parquet(store)
-        val vocab = Sources.parquet(s, store)
+            p => p =!= "").as("pieces")), graft.Scratch.dir(s, "t21_vocab"))
           .select(col("word"), size(col("pieces")).as("n_p"),
             (concat_ws("", col("pieces")) === col("word")
               && size(col("pieces")) <= length(col("word"))).as("good"))
@@ -847,11 +844,10 @@ object AdvancedQueries {
             col("o_custkey") === col("c_custkey"))
           .groupBy(col("s_nationkey").as("src"), col("c_nationkey").as("dst"))
           .agg(count(lit(1)).cast("double").as("w"))
-        val scratch = graft.Scratch.dir(s, "g2")
-        edges.write.mode("overwrite").parquet(s"$scratch/edges")
         graft.operators.PageRank
-          .runDense(Sources.parquet(s, s"$scratch/edges"), "src", "dst", "w",
-            iters = 8)
+          .runDense(
+            Sources.checkpoint(edges, graft.Scratch.dir(s, "g2/edges")),
+            "src", "dst", "w", iters = 8)
           .join(broadcast(nation(s, d)), col("node") === col("n_nationkey"))
           .select(col("node"), col("n_name"),
             round(col("rank") * lit(1000000.0)).cast("long").as("rank_x1e6"))
@@ -1662,10 +1658,10 @@ object AdvancedQueries {
         // materialization discipline; 3.2 s -> 2.6 s at sf0.1, and at
         // 100 TB the saved recomputation is a full fact-table scan)
         val dir = graft.Scratch.dir(s, "a34_ranked")
-        GlobalRank.withRowNumber(kept, Seq(col("bin").asc), "rk")
-          .select(col("rk"), col("b"))
-          .write.mode("overwrite").parquet(dir)
-        val ranked = Sources.parquet(s, dir)
+        val ranked = Sources.checkpoint(
+          GlobalRank.withRowNumber(kept, Seq(col("bin").asc), "rk")
+            .select(col("rk"), col("b")),
+          dir)
         val flips = ranked.as("a")
           .join(ranked.as("p"), col("a.rk") === col("p.rk") + 1)
           .agg(coalesce(sum((col("a.b") =!= col("p.b")).cast("long")),
@@ -2311,10 +2307,10 @@ object AdvancedQueries {
             round(col("value") * 100).cast("long").as("c"))
           .groupBy(col("bin")).agg(sum(col("c")).as("x"))
         val dir = graft.Scratch.dir(s, "a35_ranked")
-        GlobalRank.withRowNumber(byBin, Seq(col("bin").asc), "rk")
-          .select(col("rk"), col("x"))
-          .write.mode("overwrite").parquet(dir)
-        val ranked = Sources.parquet(s, dir)
+        val ranked = Sources.checkpoint(
+          GlobalRank.withRowNumber(byBin, Seq(col("bin").asc), "rk")
+            .select(col("rk"), col("x")),
+          dir)
         val tot = ranked.agg(
           sum(col("x").cast("decimal(38,0)")).as("sx"),
           count(lit(1)).as("n"))
@@ -2517,14 +2513,12 @@ object AdvancedQueries {
         // aggregate once per consumer (PlanSpec pins the zero-fact-scan
         // consumer plan)
         val dir = graft.Scratch.dir(s, "w19_daily")
-        events(s, d)
+        val daily = Sources.checkpoint(events(s, d)
           .select(expr("ts div 86400000000000").as("day"),
             round(col("value") * 100).cast("long").as("c"))
           .groupBy(col("day"))
           .agg(expr("sum(CAST(c AS DECIMAL(38,0))) * 100 div count(1)")
-            .as("y"))
-          .write.mode("overwrite").parquet(dir)
-        val daily = Sources.parquet(s, dir)
+            .as("y")), dir)
         val slopes = daily.as("a")
           .join(broadcast(daily.as("b")), col("b.day") > col("a.day"))
           .select(expr("(b.y - a.y) * 1000000 div (b.day - a.day)")

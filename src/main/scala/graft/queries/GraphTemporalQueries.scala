@@ -76,23 +76,22 @@ object GraphTemporalQueries {
     */
   /** The exact 3-round LPA label frame shared by g4 (the labels ARE its
     * output) and g11 (modularity scores them). r17: the finished labels
-    * ride [[graft.Scratch.cutEager]] — the propagation is an EAGER build
-    * (per-round checkpoint writes, the d7/c17 class), so each suite run
-    * pays it once (g11 sorts first and pays; g4 reads the identical
-    * frame). `tag` still isolates the BUILDER's per-round scratch dirs so
-    * the `cutMaterialize=false` live form (per-consumer rebuild —
-    * CutDifferentialSpec proves it row-identical) never interleaves two
-    * consumers' round files.
+    * ride [[graft.Scratch.cut]]'s by-name producer — the propagation is
+    * an EAGER build (per-round checkpoint writes, the d7/c17 class), so
+    * each suite run pays it once (g11 sorts first and pays; g4 reads the
+    * identical frame). `tag` still isolates the BUILDER's per-round
+    * scratch dirs so the `cutMaterialize=false` live form (per-consumer
+    * rebuild — CutDifferentialSpec proves it row-identical) never
+    * interleaves two consumers' round files.
     */
   private def lpaLabels(s: org.apache.spark.sql.SparkSession, d: String,
       tag: String): org.apache.spark.sql.DataFrame =
-    graft.Scratch.cutEager(s, s"lpa3_${graft.Scratch.key(d)}") {
+    graft.Scratch.cut(s, s"lpa3_${graft.Scratch.key(d)}") {
       val e = coocEdges(s, d)
-      val nbPath = graft.Scratch.dir(s, s"${tag}_nb")
-      e.select(col("u").as("node"), col("v").as("nbr"))
-        .union(e.select(col("v"), col("u")))
-        .write.mode("overwrite").parquet(nbPath)
-      val nb = Sources.parquet(s, nbPath)
+      val nb = Sources.checkpoint(
+        e.select(col("u").as("node"), col("v").as("nbr"))
+          .union(e.select(col("v"), col("u"))),
+        graft.Scratch.dir(s, s"${tag}_nb"))
       var labels = nb.select(col("node")).distinct()
         .select(col("node"), col("node").as("label"))
       for (round <- 1 to 3) {
@@ -104,9 +103,8 @@ object GraphTemporalQueries {
           .groupBy(col("node"))
           .agg(min(struct(negate(col("cnt")), col("label"))).as("best"))
           .select(col("node"), col("best.label").as("label"))
-        val path = graft.Scratch.dir(s, s"${tag}_round$round")
-        next.write.mode("overwrite").parquet(path)
-        labels = Sources.parquet(s, path)
+        labels = Sources.checkpoint(next,
+          graft.Scratch.dir(s, s"${tag}_round$round"))
       }
       labels
     }
@@ -173,10 +171,6 @@ object GraphTemporalQueries {
         val kk = 2
         val rounds = 8
         val scratch = graft.Scratch.dir(s, "g8")
-        def ckpt(df: org.apache.spark.sql.DataFrame, name: String) = {
-          df.write.mode("overwrite").parquet(s"$scratch/$name")
-          Sources.parquet(s, s"$scratch/$name")
-        }
         val e0 = coocEdges(s, d)
         def among(act: org.apache.spark.sql.DataFrame) = e0
           .join(act.select(col("n").as("u")), Seq("u"), "left_semi")
@@ -184,13 +178,13 @@ object GraphTemporalQueries {
         def degrees(ee: org.apache.spark.sql.DataFrame) = ee
           .select(col("u").as("n")).union(ee.select(col("v")))
           .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-        var act = ckpt(e0.select(col("u").as("n"))
-          .union(e0.select(col("v"))).distinct(), "a0")
+        var act = Sources.checkpoint(e0.select(col("u").as("n"))
+          .union(e0.select(col("v"))).distinct(), s"$scratch/a0")
         var prev = act
         for (r <- 1 to rounds) {
           prev = act
-          act = ckpt(degrees(among(act)).filter(col("deg") >= kk)
-            .select(col("n")), s"a$r")
+          act = Sources.checkpoint(degrees(among(act))
+            .filter(col("deg") >= kk).select(col("n")), s"$scratch/a$r")
         }
         val degF = degrees(among(act))
         val cPrev = prev.agg(count(lit(1)).as("np"))
@@ -258,16 +252,12 @@ object GraphTemporalQueries {
     Q("g9_hits",
       (s, d) => {
         val scratch = graft.Scratch.dir(s, "g9")
-        def ckpt(df: org.apache.spark.sql.DataFrame, name: String) = {
-          df.write.mode("overwrite").parquet(s"$scratch/$name")
-          Sources.parquet(s, s"$scratch/$name")
-        }
-        val ew = ckpt(lineitem(s, d)
+        val ew = Sources.checkpoint(lineitem(s, d)
           .select(col("l_orderkey"), col("l_suppkey"))
           .join(orders(s, d).select(col("o_orderkey"), col("o_custkey")),
             col("l_orderkey") === col("o_orderkey"))
           .groupBy(col("o_custkey").as("c"), col("l_suppkey").as("s"))
-          .agg(count(lit(1)).as("w")), "ew")
+          .agg(count(lit(1)).as("w")), s"$scratch/ew")
         // cadence: a checkpoint after every half-step. r18 fused a1 into
         // h1 (a checkpoint every second half-step, bit-identical results);
         // re-measured with `graft.AbMain hits` on 4 cores the fused form
@@ -276,14 +266,18 @@ object GraphTemporalQueries {
         def authStep(hub: org.apache.spark.sql.DataFrame, r: Int) = {
           val a = ew.join(hub, Seq("c")).groupBy(col("s"))
             .agg(sum(col("h") * col("w")).as("a"))
-          ckpt(a.crossJoin(broadcast(a.agg(max(col("a")).as("m"))))
-            .select(col("s"), expr("a * 1000 div m").as("a")), s"a$r")
+          Sources.checkpoint(
+            a.crossJoin(broadcast(a.agg(max(col("a")).as("m"))))
+              .select(col("s"), expr("a * 1000 div m").as("a")),
+            s"$scratch/a$r")
         }
         def hubStep(auth: org.apache.spark.sql.DataFrame, r: Int) = {
           val h = ew.join(auth, Seq("s")).groupBy(col("c"))
             .agg(sum(col("a") * col("w")).as("h"))
-          ckpt(h.crossJoin(broadcast(h.agg(max(col("h")).as("m"))))
-            .select(col("c"), expr("h * 1000 div m").as("h")), s"h$r")
+          Sources.checkpoint(
+            h.crossJoin(broadcast(h.agg(max(col("h")).as("m"))))
+              .select(col("c"), expr("h * 1000 div m").as("h")),
+            s"$scratch/h$r")
         }
         val hub0 = ew.select(col("c")).distinct().withColumn("h", lit(1000L))
         val a2 = authStep(hubStep(authStep(hub0, 1), 1), 2)
@@ -621,13 +615,11 @@ object GraphTemporalQueries {
         // exactly once (PlanSpec pins the single events scan), and at
         // 100 TB the materialized hourly table is ~1/avg-events-per-
         // hour the size of the input.
-        val hourlyPath = graft.Scratch.dir(s, "w10_hourly")
-        events(s, d)
+        val hourly = Sources.checkpoint(events(s, d)
           .groupBy(col("user_id"),
             expr("ts div 3600000000000").as("h"))
-          .agg(round(sum(col("value")), 2).as("sv"))
-          .write.mode("overwrite").parquet(hourlyPath)
-        val hourly = Sources.parquet(s, hourlyPath)
+          .agg(round(sum(col("value")), 2).as("sv")),
+          graft.Scratch.dir(s, "w10_hourly"))
         val grid = hourly.groupBy(col("user_id"))
           .agg(min(col("h")).as("mn"), max(col("h")).as("mx"))
           .select(col("user_id").as("g_user"),
@@ -1349,11 +1341,10 @@ object GraphTemporalQueries {
     Q("g5_bfs",
       (s, d) => {
         val e = coocEdges(s, d)
-        val nbPath = graft.Scratch.dir(s, "g5_nb")
-        e.select(col("u").as("node"), col("v").as("nbr"))
-          .union(e.select(col("v"), col("u")))
-          .write.mode("overwrite").parquet(nbPath)
-        val nb = Sources.parquet(s, nbPath)
+        val nb = Sources.checkpoint(
+          e.select(col("u").as("node"), col("v").as("nbr"))
+            .union(e.select(col("v"), col("u"))),
+          graft.Scratch.dir(s, "g5_nb"))
         var dist = nb.select(col("node")).distinct()
           .filter(col("node") < 100)
           .select(col("node"), lit(0).as("dist"))
@@ -1364,9 +1355,8 @@ object GraphTemporalQueries {
             .select(col("node"), (col("dist") + 1).as("dist"))
           val next = dist.unionByName(relaxed)
             .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-          val path = graft.Scratch.dir(s, s"g5_round$round")
-          next.write.mode("overwrite").parquet(path)
-          dist = Sources.parquet(s, path)
+          dist = Sources.checkpoint(next,
+            graft.Scratch.dir(s, s"g5_round$round"))
         }
         dist.orderBy(col("node"))
       },
@@ -1411,11 +1401,10 @@ object GraphTemporalQueries {
     Q("g16_harmonic_centrality",
       (s, d) => {
         val e = coocEdges(s, d)
-        val nbPath = graft.Scratch.dir(s, "g16_nb")
-        e.select(col("u").as("node"), col("v").as("nbr"))
-          .union(e.select(col("v"), col("u")))
-          .write.mode("overwrite").parquet(nbPath)
-        val nb = Sources.parquet(s, nbPath)
+        val nb = Sources.checkpoint(
+          e.select(col("u").as("node"), col("v").as("nbr"))
+            .union(e.select(col("v"), col("u"))),
+          graft.Scratch.dir(s, "g16_nb"))
         var dist = nb.select(col("node")).distinct()
           .filter(col("node") < 100)
           .select(col("node").as("seed"), col("node"), lit(0).as("dist"))
@@ -1427,9 +1416,8 @@ object GraphTemporalQueries {
           val next = dist.unionByName(relaxed)
             .groupBy(col("seed"), col("node"))
             .agg(min(col("dist")).as("dist"))
-          val path = graft.Scratch.dir(s, s"g16_round$round")
-          next.write.mode("overwrite").parquet(path)
-          dist = Sources.parquet(s, path)
+          dist = Sources.checkpoint(next,
+            graft.Scratch.dir(s, s"g16_round$round"))
         }
         dist.filter(col("dist") > 0)
           .groupBy(col("seed"))
@@ -1490,11 +1478,10 @@ object GraphTemporalQueries {
       (s, d) => {
         val e = coocEdgesWeighted(s, d)
           .select(col("u"), col("v"), expr("1000 div c").as("w"))
-        val nbPath = graft.Scratch.dir(s, "g6_nb")
-        e.select(col("u").as("node"), col("v").as("nbr"), col("w"))
-          .union(e.select(col("v"), col("u"), col("w")))
-          .write.mode("overwrite").parquet(nbPath)
-        val nb = Sources.parquet(s, nbPath)
+        val nb = Sources.checkpoint(
+          e.select(col("u").as("node"), col("v").as("nbr"), col("w"))
+            .union(e.select(col("v"), col("u"), col("w"))),
+          graft.Scratch.dir(s, "g6_nb"))
         var dist = nb.select(col("node")).distinct()
           .filter(col("node") < 100)
           .select(col("node"), lit(0L).as("dist"))
@@ -1505,9 +1492,8 @@ object GraphTemporalQueries {
             .select(col("node"), (col("dist") + col("w")).as("dist"))
           val next = dist.unionByName(relaxed)
             .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-          val path = graft.Scratch.dir(s, s"g6_round$round")
-          next.write.mode("overwrite").parquet(path)
-          dist = Sources.parquet(s, path)
+          dist = Sources.checkpoint(next,
+            graft.Scratch.dir(s, s"g6_round$round"))
         }
         dist.orderBy(col("node"))
       },
@@ -1929,9 +1915,8 @@ object GraphTemporalQueries {
         // the events scan + lead-window + aggregate run exactly ONCE per
         // query (the returned plan's totals branch used to replay them:
         // ScanBudget f6 events=1 → 0).
-        val countsPath = graft.Scratch.dir(s, "f6_counts")
-        counts.write.mode("overwrite").parquet(countsPath)
-        val countsF = Sources.parquet(s, countsPath)
+        val countsF = Sources.checkpoint(counts,
+          graft.Scratch.dir(s, "f6_counts"))
         val totals = countsF.groupBy(col("from_type"))
           .agg(sum(col("n_pair")).as("n_from"))
         // operators/MarkovChain pads SINK states (appearing only as
@@ -1943,10 +1928,9 @@ object GraphTemporalQueries {
         // planned once per consumer (pi/prev/mass), and left live the
         // padding's join lineage would replan per consumer (measured
         // 19 exchanges vs 6 flat).
-        val transPath = graft.Scratch.dir(s, "f6_trans")
-        graft.operators.MarkovChain.paddedTransitions(countsF)
-          .write.mode("overwrite").parquet(transPath)
-        val trans = Sources.parquet(s, transPath)
+        val trans = Sources.checkpoint(
+          graft.operators.MarkovChain.paddedTransitions(countsF),
+          graft.Scratch.dir(s, "f6_trans"))
         val (pi, prev) = graft.operators.MarkovChain.stationary(s, trans, 8)
         val mass = pi.agg(sum(col("p_x1e6")).as("mass_x1e6"))
         pi.join(prev.select(col("state"), col("p_x1e6").as("p_prev")),
@@ -2624,14 +2608,12 @@ object GraphTemporalQueries {
           .agg(min(col("day")).as("born"), max(col("day")).as("last"))
         val end = pu.agg(max(col("last")).as("endd"))
         val dir = graft.Scratch.dir(s, "f9_lt")
-        pu.crossJoin(broadcast(end))
+        val lt = Sources.checkpoint(pu.crossJoin(broadcast(end))
           .select((col("last") - col("born")).as("t"),
             (col("last") < col("endd")).cast("long").as("e"))
           .groupBy(col("t"))
           .agg(sum(col("e")).as("d"), sum(lit(1L) - col("e")).as("c"))
-          .withColumn("out", col("d") + col("c"))
-          .write.mode("overwrite").parquet(dir)
-        val lt = Sources.parquet(s, dir)
+          .withColumn("out", col("d") + col("c")), dir)
         val cum = GlobalRank.withRankAndRunningTotals(lt,
           Seq(col("t").asc), Seq("out"), "rk", Seq("cumout"))
         val tot = lt.agg(sum(col("out")).as("nn"))
@@ -2714,11 +2696,9 @@ object GraphTemporalQueries {
     Q("f10_stickiness",
       (s, d) => {
         val dir = graft.Scratch.dir(s, s"f10_ud_${graft.Scratch.key(d)}")
-        events(s, d)
+        val ud = Sources.checkpoint(events(s, d)
           .select(col("user_id"), expr("ts div 86400000000000").as("day"))
-          .distinct()
-          .write.mode("overwrite").parquet(dir)
-        val ud = Sources.parquet(s, dir)
+          .distinct(), dir)
         val dau = ud.groupBy(col("day"))
           .agg(count_distinct(col("user_id")).as("dau"))
         val wau = ud

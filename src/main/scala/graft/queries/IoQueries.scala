@@ -61,10 +61,9 @@ object IoQueries {
     // reference's persist of the indexed train set (sample_indexer.py:51).
     Q("s2_parquet_roundtrip",
       (s, d) => {
-        val out = tmp(s, "s2_orders")
-        graft.sources.Sources.writeParquet(
-          orders(s, d).filter(col("o_totalprice") > 100000.0), out)
-        graft.sources.Sources.parquet(s, out)
+        Sources.checkpoint(
+            orders(s, d).filter(col("o_totalprice") > 100000.0),
+            tmp(s, "s2_orders"))
           .groupBy(col("o_orderstatus"))
           .agg(count(lit(1)).as("n"), round(sum(col("o_totalprice")), 2).as("sv"))
           .orderBy("o_orderstatus")
@@ -149,10 +148,8 @@ object IoQueries {
     // the file layout. The read-back aggregate proves no rows were lost.
     Q("o7_repartition_write",
       (s, d) => {
-        val out = tmp(s, "o7_events")
-        events(s, d).repartition(8, col("user_id"))
-          .write.mode("overwrite").parquet(out)
-        Sources.parquet(s, out)
+        Sources.checkpoint(events(s, d).repartition(8, col("user_id")),
+            tmp(s, "o7_events"))
           .groupBy(col("user_id")).agg(count(lit(1)).as("n"))
           .orderBy("user_id")
       },
@@ -215,13 +212,14 @@ object IoQueries {
       (s, d) => {
         val src = tmp(s, "o11_small")
         val dst = tmp(s, "o11_compact")
-        events(s, d).select("event_id", "user_id", "event_type", "value")
-          .repartition(64).write.mode("overwrite").parquet(src)
+        val small = Sources.checkpoint(
+          events(s, d).select("event_id", "user_id", "event_type", "value")
+            .repartition(64), src)
         val before = graft.operators.Compaction.dataFiles(s, src)
         val after = graft.operators.Compaction.compactParquet(
           s, src, dst, targetFileBytes = 512L * 1024 * 1024,
           sortCols = Seq(col("user_id")))
-        val rowsBefore = Sources.parquet(s, src).count()
+        val rowsBefore = small.count()
         val rowsAfter = Sources.parquet(s, dst).count()
         val spark = s
         import spark.implicits._

@@ -684,11 +684,9 @@ object MlQueries {
       (s, d) => {
         import graft.operators.GlobalRank
         val dir = graft.Scratch.dir(s, "m18_scored")
-        events(s, d).select(col("event_id"),
+        val ev = Sources.checkpoint(events(s, d).select(col("event_id"),
             round(col("value") * 100).cast("long").as("c"),
-            (col("event_type") === "purchase").cast("long").as("label"))
-          .write.mode("overwrite").parquet(dir)
-        val ev = Sources.parquet(s, dir)
+            (col("event_type") === "purchase").cast("long").as("label")), dir)
         val ranked = GlobalRank.withRowNumber(ev,
           Seq(col("c").desc, col("event_id").asc), "rk")
         val tot = ev.agg(count(lit(1)).as("nn"), sum(col("label")).as("pp"))
@@ -769,15 +767,13 @@ object MlQueries {
       (s, d) => {
         import graft.operators.GlobalRank
         val dir = graft.Scratch.dir(s, s"m19_lvl_${graft.Scratch.key(d)}")
-        Tables.tokenizedDocs(s, d).select(
+        val byScore = Sources.checkpoint(Tables.tokenizedDocs(s, d).select(
             (col("lang") === "en").cast("long").as("is_en"),
             expr("size(filter(w, t -> t in ('the','a','of'))) * 1000 div size(w)")
               .as("sc"))
           .groupBy(col("sc"))
           .agg(sum(col("is_en")).as("pos"),
-            sum(lit(1L) - col("is_en")).as("neg"))
-          .write.mode("overwrite").parquet(dir)
-        val byScore = Sources.parquet(s, dir)
+            sum(lit(1L) - col("is_en")).as("neg")), dir)
         GlobalRank.withRankAndRunningTotals(byScore,
             Seq(col("sc").asc), Seq("neg"), "sr", Seq("cum_neg"))
           .agg(sum(col("pos")).cast("long").as("n_pos"),

@@ -155,13 +155,14 @@ object PipelineQueries {
     * band pairs -> iterative min-label propagation. ONE definition so the
     * banding parameters and the propagation contract can't drift between
     * the two consumers (see d7's comment for the two-level checkpoint
-    * rationale). r17: the finished label frame rides [[Scratch.cutEager]]
-    * — the 10-round propagation is an EAGER build (its own pair write +
-    * per-round checkpoints), so the plain cut memo could never stop the
-    * second consumer re-running it; the by-name cut makes each suite run
-    * pay the build exactly once (c17 constructs first in sorted order and
-    * pays; d7 reads the identical labels — the u1/u2 change-batch
-    * discipline applied to the one remaining doubled iterative build).
+    * rationale). r17: the finished label frame rides [[Scratch.cut]]'s
+    * by-name producer — the 10-round propagation is an EAGER build (its
+    * own pair write + per-round checkpoints), so a by-value cut memo could
+    * never stop the second consumer re-running it; the by-name cut makes
+    * each suite run pay the build exactly once (c17 constructs first in
+    * sorted order and pays; d7 reads the identical labels — the u1/u2
+    * change-batch discipline applied to the one remaining doubled
+    * iterative build).
     * `cutMaterialize=false` restores the rebuild-per-consumer form;
     * CutDifferentialSpec holds both forms row-identical. The builder's
     * pair and label checkpoints live under a dir keyed by the consumer
@@ -170,7 +171,7 @@ object PipelineQueries {
     * earlier still read.
     */
   private def dupComponents(s: SparkSession, d: String, tag: String): DataFrame =
-    graft.Scratch.cutEager(s, s"d7_comps_${graft.Scratch.key(d)}") {
+    graft.Scratch.cut(s, s"d7_comps_${graft.Scratch.key(d)}") {
       val bands = lshBandFrame(s, d)
       val pairs = bands.as("x")
         .join(bands.as("y").hint("shuffle_hash"),
@@ -180,10 +181,10 @@ object PipelineQueries {
         .select(col("x.doc_id").as("a_id"), col("y.doc_id").as("b_id"))
         .distinct()
       val scratch = graft.Scratch.dir(s, s"${tag}_dupcomps_${graft.Scratch.key(d)}")
-      pairs.write.mode("overwrite").parquet(s"$scratch/pairs")
       graft.operators.ConnectedComponents
-        .propagateMinLabel(Sources.parquet(s, s"$scratch/pairs"), "a_id", "b_id",
-          maxIter = 10, checkpointDir = Some(s"$scratch/labels"))
+        .propagateMinLabel(Sources.checkpoint(pairs, s"$scratch/pairs"),
+          "a_id", "b_id", maxIter = 10,
+          checkpointDir = Some(s"$scratch/labels"))
         .select(col("node").as("doc_id"), col("comp"))
     }
 
@@ -468,12 +469,10 @@ object PipelineQueries {
     Q("d8_incremental_dedup",
       (s, d) => {
         val docs = documents(s, d)
-        val store = graft.Scratch.dir(s, "d8_ledger")
-        docs.filter(col("doc_id") < 400)
+        val ledger = Sources.checkpoint(docs.filter(col("doc_id") < 400)
           .groupBy(md5(col("text")).as("h"))
-          .agg(min(col("doc_id")).as("first_id"))
-          .write.mode("overwrite").parquet(store)
-        val ledger = Sources.parquet(s, store)
+          .agg(min(col("doc_id")).as("first_id")),
+          graft.Scratch.dir(s, "d8_ledger"))
         val batch = docs.filter(col("doc_id") >= 400)
           .unionByName(docs.filter(col("doc_id").between(100, 119))
             .withColumn("doc_id", col("doc_id") + 10000))
@@ -525,14 +524,12 @@ object PipelineQueries {
       (s, d) => {
         val sigs = tokenized(s, d)
           .select(col("doc_id"), minhashSigNative(col("text"), 16).as("sig"))
-        val store = graft.Scratch.dir(s, "d11_sigstore")
-        sigs.filter(col("doc_id") % 4 =!= 0)
-          .write.mode("overwrite").parquet(store)
         def banded(df: DataFrame, idc: String, sigc: String): DataFrame = df
           .select(col("doc_id").as(idc), col("sig").as(sigc),
             posexplode_outer(lshBands(col("sig"), 4, 4))
               .as(Seq("band_idx", "band_key")))
-        val cb = banded(Sources.parquet(s, store), "c_id", "c_sig")
+        val cb = banded(Sources.checkpoint(sigs.filter(col("doc_id") % 4 =!= 0),
+          graft.Scratch.dir(s, "d11_sigstore")), "c_id", "c_sig")
         val batch = sigs.filter(col("doc_id") % 4 === 0)
         val res = banded(batch, "b_id", "b_sig")
           .join(cb, Seq("band_idx", "band_key"))
@@ -843,11 +840,9 @@ object PipelineQueries {
         // write, both sides re-read files. Same shape a 100 TB pipeline
         // uses — verification runs against a materialized signature table.
         val dir = graft.Scratch.dir(s, "d5_shingles")
-        tokenized(s, d)
+        val sh = Sources.checkpoint(tokenized(s, d)
           .select(col("doc_id"),
-            array_distinct(shinglesNative(col("text"), 3)).as("sh"))
-          .write.mode("overwrite").parquet(dir)
-        val sh = Sources.parquet(s, dir)
+            array_distinct(shinglesNative(col("text"), 3)).as("sh")), dir)
         sh.as("a")
           .join(sh.as("b"), col("b.doc_id") === col("a.doc_id") + 1)
           .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
@@ -976,12 +971,10 @@ object PipelineQueries {
     Q("m20_multiclass_eval",
       (s, d) => {
         val dir = graft.Scratch.dir(s, s"m20_cm_${graft.Scratch.key(d)}")
-        tokenized(s, d)
+        val cm = Sources.checkpoint(tokenized(s, d)
           .select(col("lang"), predLang.as("pred"))
           .groupBy(col("lang"), col("pred"))
-          .agg(count(lit(1)).as("n"))
-          .write.mode("overwrite").parquet(dir)
-        val cm = Sources.parquet(s, dir)
+          .agg(count(lit(1)).as("n")), dir)
         val byTrue = cm.groupBy(col("lang"))
           .agg(sum(col("n")).as("n_true"),
             sum(when(col("pred") === col("lang"), col("n"))
@@ -1200,11 +1193,9 @@ object PipelineQueries {
         // 4.7 s -> ~1 s at sf0.1). Tokenize-once-reuse-many is also the
         // only shape that survives a 100 TB corpus.
         val dir = graft.Scratch.dir(s, "t12_grams")
-        tokenized(s, d)
+        val base = Sources.checkpoint(tokenized(s, d)
           .select(col("doc_id"), col("w"),
-            shinglesNative(col("text"), 2).as("bg"))
-          .write.mode("overwrite").parquet(dir)
-        val base = Sources.parquet(s, dir)
+            shinglesNative(col("text"), 2).as("bg")), dir)
         val counts = base.select(col("doc_id"),
           size(col("w")).cast("long").as("n_tokens"),
           size(col("bg")).cast("long").as("n_bigrams"))
@@ -1267,11 +1258,9 @@ object PipelineQueries {
         // instead of re-shingling (and re-inlining the tokenizer into the
         // lambda) per branch.
         val dir = graft.Scratch.dir(s, "c3_shingles")
-        tokenized(s, d)
+        val sh = Sources.checkpoint(tokenized(s, d)
           .select(col("doc_id"),
-            array_distinct(shinglesNative(col("text"), 3)).as("sh"))
-          .write.mode("overwrite").parquet(dir)
-        val sh = Sources.parquet(s, dir)
+            array_distinct(shinglesNative(col("text"), 3)).as("sh")), dir)
         val bench = sh.filter(col("doc_id") % 20 === 0)
           .select(explode(col("sh")).as("g")).distinct()
         val train = sh.filter(col("doc_id") % 20 =!= 0)
@@ -1328,11 +1317,9 @@ object PipelineQueries {
     Q("c8_bloom_decontaminate",
       (s, d) => {
         val dir = graft.Scratch.dir(s, "c8_shingles")
-        tokenized(s, d)
+        val sh = Sources.checkpoint(tokenized(s, d)
           .select(col("doc_id"),
-            array_distinct(shinglesNative(col("text"), 3)).as("sh"))
-          .write.mode("overwrite").parquet(dir)
-        val sh = Sources.parquet(s, dir)
+            array_distinct(shinglesNative(col("text"), 3)).as("sh")), dir)
         val bench = sh.filter(col("doc_id") % 20 === 0)
           .select(explode(col("sh")).as("g")).distinct()
         // ~1% FP at 64k expected items; sized by formula, not by counting
@@ -1752,12 +1739,9 @@ object PipelineQueries {
         val scaled = ivfEmb(s, d).select(col("vec_id"), col("v"),
           (array_max(transform(col("v"), x => abs(x))) / 127.0).as("scale"))
           .filter(col("scale") > 0)
-        val store = graft.Scratch.dir(s, "e12_qv")
-        scaled.select(col("vec_id"),
+        val q = Sources.checkpoint(scaled.select(col("vec_id"),
           transform(col("v"), x => round(x / col("scale")).cast("long"))
-            .as("qv"))
-          .write.mode("overwrite").parquet(store)
-        val q = Sources.parquet(s, store)
+            .as("qv")), graft.Scratch.dir(s, "e12_qv"))
         val pCols = (0 until k).map { j =>
           aggregate(zip_with(col("qv"), array(signs(j).map(lit).toSeq: _*),
             (x, sg) => x * sg), lit(0L), _ + _).as(s"p$j")
@@ -2264,9 +2248,8 @@ object PipelineQueries {
             lit(1L).as("rev"), lit(0L).as("ver"))
           .unionByName(winners.filter(col("op") =!= "D")
             .select(col("doc_id"), col("text"), col("rev"), col("ver")))
-        val path = graft.Scratch.dir(s, s"u11_base_${graft.Scratch.key(d)}")
-        compacted.write.mode("overwrite").parquet(path)
-        Sources.parquet(s, path)
+        Sources.checkpoint(compacted,
+            graft.Scratch.dir(s, s"u11_base_${graft.Scratch.key(d)}"))
           .select(col("doc_id"), col("rev"), col("ver"),
             md5(col("text")).as("text_md5"))
           .orderBy("doc_id")
@@ -2367,10 +2350,8 @@ object PipelineQueries {
             .agg(count(lit(1)).as("n_events"),
               sum(col("cents")).as("sum_cents"),
               min(col("ts")).as("first_ns"), max(col("ts")).as("last_ns"))
-        val ledgerPath = graft.Scratch.dir(s, "u4_ledger")
-        partial(ev.filter(col("event_id") % 5 =!= 4))
-          .write.mode("overwrite").parquet(ledgerPath)
-        Sources.parquet(s, ledgerPath)
+        Sources.checkpoint(partial(ev.filter(col("event_id") % 5 =!= 4)),
+            graft.Scratch.dir(s, "u4_ledger"))
           .unionByName(partial(ev.filter(col("event_id") % 5 === 4)))
           .groupBy(col("user_id"))
           .agg(sum(col("n_events")).as("n_events"),
@@ -3260,12 +3241,10 @@ object PipelineQueries {
     Q("d14_minhash_calibration",
       (s, d) => {
         val dir = graft.Scratch.dir(s, "d14_base")
-        tokenized(s, d)
+        val base = Sources.checkpoint(tokenized(s, d)
           .select(col("doc_id"),
             array_distinct(shinglesNative(col("text"), 3)).as("sh"),
-            minhashSigNative(col("text"), 16).as("sig"))
-          .write.mode("overwrite").parquet(dir)
-        val base = Sources.parquet(s, dir)
+            minhashSigNative(col("text"), 16).as("sig")), dir)
         base.as("a")
           .join(base.as("b"), col("b.doc_id") === col("a.doc_id") + 1)
           .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
@@ -3718,10 +3697,8 @@ object PipelineQueries {
         // once per chunk), and a 100 TB pipeline hashes chunks off a
         // materialized token table anyway (d5's discipline)
         val dir = graft.Scratch.dir(s, "d15_chunks")
-        tokenized(s, d)
-          .select(col("doc_id"), col("w"), bounds.as("bs"))
-          .write.mode("overwrite").parquet(dir)
-        val base = Sources.parquet(s, dir)
+        val base = Sources.checkpoint(tokenized(s, d)
+          .select(col("doc_id"), col("w"), bounds.as("bs")), dir)
         val starts = concat(array(lit(1)), transform(col("bs"), b => b + 1))
         val ends = concat(col("bs"), array(size(col("w"))))
         base
@@ -4020,11 +3997,9 @@ object PipelineQueries {
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         val q = emb.filter(col("vec_id") < 8)
           .select(col("vec_id").as("q_id"), col("v").as("qv"))
-        graft.similarity.ExactCosine
+        val all = Sources.checkpoint(graft.similarity.ExactCosine
           .topKPrefixes(emb, q, 10, Seq(8, 16, 32, 64))
-          .select(col("dim"), col("q_id"), col("cand_id"))
-          .write.mode("overwrite").parquet(dir)
-        val all = Sources.parquet(s, dir)
+          .select(col("dim"), col("q_id"), col("cand_id")), dir)
         val full = all.filter(col("dim") === 64)
           .select(col("q_id"), col("cand_id"), lit(1L).as("hit"))
         all.join(full, Seq("q_id", "cand_id"), "left_outer")
@@ -4089,15 +4064,14 @@ object PipelineQueries {
         val tot = obs.agg(sum(col("n_obs")).as("nn"))
         val dims = obs.agg(count_distinct(col("lang")).as("nl"),
           count_distinct(col("source")).as("ns"))
-        val base = graft.Scratch.dir(s, "c16_base")
-        obs.crossJoin(broadcast(tot)).crossJoin(broadcast(dims))
-          .select(col("lang"), col("source"), col("n_obs"),
-            expr("CAST(n_obs AS DECIMAL(38,0)) * 1000000000000 div nn")
-              .as("w"),
-            expr("1000000000000 div nl").as("tl"),
-            expr("1000000000000 div ns").as("tsrc"))
-          .write.mode("overwrite").parquet(base)
-        var cur = Sources.parquet(s, base)
+        var cur = Sources.checkpoint(
+          obs.crossJoin(broadcast(tot)).crossJoin(broadcast(dims))
+            .select(col("lang"), col("source"), col("n_obs"),
+              expr("CAST(n_obs AS DECIMAL(38,0)) * 1000000000000 div nn")
+                .as("w"),
+              expr("1000000000000 div nl").as("tl"),
+              expr("1000000000000 div ns").as("tsrc")),
+          graft.Scratch.dir(s, "c16_base"))
         for (r <- 1 to 3) {
           val rowSum = cur.groupBy(col("lang")).agg(sum(col("w")).as("sl"))
           val afterRow = cur.join(broadcast(rowSum), Seq("lang"))
@@ -4110,9 +4084,7 @@ object PipelineQueries {
             .select(col("lang"), col("source"), col("n_obs"),
               expr("CAST(w AS DECIMAL(38,0)) * tsrc div nullif(ss, 0)")
                 .as("w"), col("tl"), col("tsrc"))
-          val p = graft.Scratch.dir(s, s"c16_round$r")
-          next.write.mode("overwrite").parquet(p)
-          cur = Sources.parquet(s, p)
+          cur = Sources.checkpoint(next, graft.Scratch.dir(s, s"c16_round$r"))
         }
         val byLang = Window.partitionBy(col("lang"))
         cur
@@ -4226,12 +4198,10 @@ object PipelineQueries {
         val ev = events(s, d).select(col("event_type"), col("ts"))
         val cut = ev.agg(expr("(min(ts) + max(ts)) div 2").as("cut"))
         val dir = graft.Scratch.dir(s, "c18_cat")
-        ev.crossJoin(broadcast(cut))
+        val cat = Sources.checkpoint(ev.crossJoin(broadcast(cut))
           .groupBy(col("event_type"))
           .agg(sum((col("ts") < col("cut")).cast("long")).as("n1"),
-            sum((col("ts") >= col("cut")).cast("long")).as("n2"))
-          .write.mode("overwrite").parquet(dir)
-        val cat = Sources.parquet(s, dir)
+            sum((col("ts") >= col("cut")).cast("long")).as("n2")), dir)
         val tot = cat.agg(sum(col("n1")).as("t1"), sum(col("n2")).as("t2"))
         val per = cat.crossJoin(broadcast(tot))
           .select(col("event_type"), col("n1"), col("n2"),

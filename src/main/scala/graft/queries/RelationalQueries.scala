@@ -642,7 +642,7 @@ object RelationalQueries {
     Q("b11_tpch_q15",
       (s, d) => {
         val dir = graft.Scratch.dir(s, s"b11_rev_${graft.Scratch.key(d)}")
-        lineitem(s, d)
+        val rev = Sources.checkpoint(lineitem(s, d)
           .filter(col("l_shipdate") >= lit("1996-01-01")
             && col("l_shipdate") < lit("1996-04-01"))
           .select(col("l_suppkey"),
@@ -651,9 +651,7 @@ object RelationalQueries {
               .as("rev_x1e4"))
           .groupBy(col("l_suppkey"))
           .agg(sum(col("rev_x1e4").cast("decimal(38,0)")).cast("long")
-            .as("total_rev_x1e4"))
-          .write.mode("overwrite").parquet(dir)
-        val rev = Sources.parquet(s, dir)
+            .as("total_rev_x1e4")), dir)
         val winners = rev
           .join(broadcast(rev.agg(max(col("total_rev_x1e4")).as("mx"))),
             col("total_rev_x1e4") === col("mx"))
@@ -1315,7 +1313,7 @@ object RelationalQueries {
               .select(col("n_nationkey"))),
             col("s_nationkey") === col("n_nationkey"), "left_semi")
           .select(col("s_suppkey"))
-        lineitem(s, d)
+        val pv = Sources.checkpoint(lineitem(s, d)
           .select(col("l_partkey"), col("l_suppkey"),
             round(col("l_quantity")).cast("long").as("qty"))
           .join(broadcast(natSupp),
@@ -1326,9 +1324,7 @@ object RelationalQueries {
             col("l_partkey") === col("p_partkey"))
           .groupBy(col("l_partkey"))
           .agg(sum((col("qty") * col("retail_cents"))
-            .cast("decimal(38,0)")).as("val"))
-          .write.mode("overwrite").parquet(dir)
-        val pv = Sources.parquet(s, dir)
+            .cast("decimal(38,0)")).as("val")), dir)
         pv.join(broadcast(pv.agg(sum(col("val")).as("tv"),
             count(lit(1)).as("np"))))
           .filter(col("val") * col("np") > col("tv") * 2)

@@ -94,6 +94,19 @@ object Sources {
   def writeParquet(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").parquet(path)
 
+  /** The engine's one per-build checkpoint: write `df` to `path` as
+    * overwrite parquet and hand back the [[parquet]] read of it, so the
+    * returned frame's lineage starts at the files (an iterative round, a
+    * frame several consumers scan). Every build pays the write again. A
+    * frame shared once per run across queries is `Scratch.cut` instead,
+    * which memoizes the write per cut name. A source guard in
+    * ParquetReadSpec fails on any other write-then-read of one path.
+    */
+  def checkpoint(df: DataFrame, path: String): DataFrame = {
+    writeParquet(df, path)
+    parquet(df.sparkSession, path)
+  }
+
   /** Single-file CSV export (S6/S7) — coalesce(1) serializes the final
     * stage; only for export-sized frames (factor matrices, genre tables),
     * never for fact data.

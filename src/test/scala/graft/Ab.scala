@@ -1,15 +1,13 @@
 package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable
 import scala.util.control.NonFatal
 import scala.util.hashing.MurmurHash3
 
 import org.apache.hadoop.fs.{FileUtil, Path}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.queries.GraphTemporalQueries
@@ -34,8 +32,8 @@ import graft.sources.Sources
   *    one input, fails that cell, naming the input and both variants.
   *  - A failing cell prints an `ERROR` row and the other cells still run;
   *    the experiment then throws, naming every failed cell.
-  *  - Shuffle-write bytes come from one stage listener, read after
-  *    `GraftBridge.drainListeners`, over the timed region only.
+  *  - Shuffle-write bytes come from [[SparkSpec.ran]] over the timed
+  *    region only.
   *  - One table: MIN seconds per case, input and variant, its ratio to
   *    the case's first variant on that input and to the same variant on
   *    the first input, shuffle MB and result rows.
@@ -82,14 +80,6 @@ object Ab {
     */
   def run(spark: SparkSession, runs: Int, inputs: Seq[(String, String)],
       cases: Seq[Case]): Seq[String] = {
-    val shuffled = new AtomicLong
-    val listener = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        shuffled.addAndGet(
-          e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten); ()
-      }
-    }
-    def bytes(): Long = { GraftBridge.drainListeners(spark); shuffled.get }
     // warm-up through the whole stack, untimed (Bench's rule)
     noop(Tables.lineitem(spark, inputs.head._2).groupBy("l_returnflag").count())
     val lines = Seq.newBuilder[String]
@@ -106,12 +96,14 @@ object Ab {
           val v = c.variants(i)
           v.setup(spark, dir)
           i -> v.parts.map { case (_, b) =>
-            val (b0, t0) = (bytes(), System.nanoTime())
-            val df = b(spark, dir)
-            noop(df)
-            val cell = ((System.nanoTime() - t0) / 1e9, bytes() - b0)
+            val ((sec, df), ran) = SparkSpec.ran(spark) {
+              val t0 = System.nanoTime()
+              val df = b(spark, dir)
+              noop(df)
+              ((System.nanoTime() - t0) / 1e9, df)
+            }
             // before the next part: a live build may overwrite this one's files
-            (cell, digest(df))
+            ((sec, ran.shuffleWriteBytes), digest(df))
           }
         }.toMap
         c.variants.indices.map(done)
@@ -146,14 +138,13 @@ object Ab {
           f"${b / 1e6}%9.1f $rows%8d")
       }
     }
-    spark.sparkContext.addSparkListener(listener)
-    try for (c <- cases; (in, dir) <- inputs) {
+    for (c <- cases; (in, dir) <- inputs) {
       try measure(c, in, dir) catch { case NonFatal(e) =>
         val err = String.valueOf(e).linesIterator.next()
         emit(f"AB ${c.name}%-40s $in%-8s ERROR $err")
         failed += s"${c.name} on $in: $err"
       }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
     val errors = failed.result()
     if (errors.nonEmpty) throw new IllegalStateException(
       s"${errors.size} cell(s) failed:\n${errors.mkString("\n")}")
@@ -242,10 +233,6 @@ object Ab {
 object AbMain {
   import Ab.{Case, Variant}
 
-  private val scratchRead = (s: SparkSession, p: String, df: DataFrame) => {
-    df.write.mode("overwrite").parquet(p); Sources.parquet(s, p)
-  }
-
   /** g9_hits with a checkpoint after every second half-step (h1 and the
     * final a2): the fused form of the registered one (a checkpoint after
     * every half-step). Skipping one level is the bound: a1's subtree is
@@ -253,16 +240,16 @@ object AbMain {
     */
   private val hitsEvery2: Ab.Build = (s, d) => {
     val scratch = Scratch.dir(s, "g9every2")
-    val ew = scratchRead(s, s"$scratch/ew", Tables.lineitem(s, d)
+    val ew = Sources.checkpoint(Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_suppkey"))
       .join(Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey")),
         col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_custkey").as("c"), col("l_suppkey").as("s"))
-      .agg(count(lit(1)).as("w")))
+      .agg(count(lit(1)).as("w")), s"$scratch/ew")
     def scaled(df: DataFrame, k: String, v: String, step: Int, mat: Boolean) = {
       val out = df.crossJoin(broadcast(df.agg(max(col(v)).as("m"))))
         .select(col(k), expr(s"$v * 1000 div m").as(v))
-      if (mat) scratchRead(s, s"$scratch/$v$step", out) else out
+      if (mat) Sources.checkpoint(out, s"$scratch/$v$step") else out
     }
     def authStep(hub: DataFrame, step: Int, mat: Boolean) = scaled(ew.join(hub, Seq("c"))
       .groupBy(col("s")).agg(sum(col("h") * col("w")).as("a")), "s", "a", step, mat)
@@ -290,13 +277,14 @@ object AbMain {
       .join(act.select(col("n").as("v")), Seq("v"), "left_semi")
     def degrees(ee: DataFrame) = ee.select(col("u").as("n"))
       .union(ee.select(col("v"))).groupBy(col("n")).agg(count(lit(1)).as("deg"))
-    var act = scratchRead(s, s"$scratch/a0",
-      e0.select(col("u").as("n")).union(e0.select(col("v"))).distinct())
+    var act = Sources.checkpoint(
+      e0.select(col("u").as("n")).union(e0.select(col("v"))).distinct(),
+      s"$scratch/a0")
     var prev = act
     for (r <- 1 to 8) {
       prev = act
       val next = degrees(among(act)).filter(col("deg") >= 2).select(col("n"))
-      act = if (r % 2 == 0) scratchRead(s, s"$scratch/a$r", next) else next
+      act = if (r % 2 == 0) Sources.checkpoint(next, s"$scratch/a$r") else next
     }
     act.join(degrees(among(act)), Seq("n"), "left")
       .crossJoin(broadcast(prev.agg(count(lit(1)).as("np"))))

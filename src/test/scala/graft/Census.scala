@@ -247,8 +247,8 @@ object Census {
     "w21_drawdown")
 
   /** The round-17 optimization cuts: EAGER builds shared by two queries
-    * through [[Scratch.cutEager]] (the by-name variant — a plain cut's
-    * by-value producer would re-run the build before the memo applied).
+    * through [[Scratch.cut]], whose by-name producer is not built again
+    * once the memo holds.
     * d7/c17 share the 10-round label propagation (`d7_comps`); t16/t21
     * share the 6-merge BPE training (`bpe6`). Same differential contract:
     * `cutMaterialize=false` restores the per-consumer rebuild and results

@@ -85,7 +85,7 @@ class CutDifferentialSpec extends SparkSpec {
     "t25_tok" -> "t25_bigram_lift", "t25_uni" -> "t25_bigram_lift",
     "uchg" -> "u1_upsert", "ud2" -> "u10_mor_read",
     "w16_bins" -> "w16_changepoint", "w21_day" -> "w21_drawdown",
-    // r17 cutEager sites (shared eager builds; first consumer owns)
+    // r17 sites whose by-name producer is an eager build (first consumer owns)
     "d7_comps" -> "c17_survivor_quality", "bpe6" -> "t16_bpe_merges",
     "lpa3" -> "g11_modularity", "lshb" -> "c11_quality_survivor")
 
@@ -105,15 +105,11 @@ class CutDifferentialSpec extends SparkSpec {
     // at their QUERY-side literal (g1_maps in PipelineQueries) instead.
     val site =
       """Scratch\.cut\(\s*[^)]*?s"([A-Za-z0-9_]+)_\$\{(?:graft\.)?Scratch\.key""".r
-    // cutEager sites (r17): same name contract, by-name producer
-    val siteEager =
-      """Scratch\.cutEager\(\s*[^)]*?s"([A-Za-z0-9_]+)_\$\{(?:graft\.)?Scratch\.key""".r
     val nameArg =
       """cutName\s*=\s*Some\(\s*s"([A-Za-z0-9_]+)_\$\{(?:graft\.)?Scratch\.key""".r
     val texts = sources.map(Files.readString)
     val prefixes = texts.flatMap { text =>
       site.findAllMatchIn(text).map(_.group(1)) ++
-        siteEager.findAllMatchIn(text).map(_.group(1)) ++
         nameArg.findAllMatchIn(text).map(_.group(1))
     }.toSet
     assert(prefixes.nonEmpty, "grep found no cut sites — regex rotted?")
@@ -123,17 +119,14 @@ class CutDifferentialSpec extends SparkSpec {
     // plumbing: the foldLeft apply plus the Some(...) at the g1 call site,
     // which nameArg matches). A new wrapper that routes a name in some
     // third way changes this count and must be registered here.
-    val rawSites = texts.map("Scratch\\.cut(Eager)?\\(".r.findAllIn(_).length).sum
-    val literalSites = texts.map(t =>
-      site.findAllMatchIn(t).length + siteEager.findAllMatchIn(t).length).sum
-    // GenrePipeline.scala's parameterized Scratch.cut(df.sparkSession, n),
-    // plus Scratch.scala's own cutEager definition body calling nothing —
-    // the definition site contains no call; only call sites count, and
-    // cutEager's doc/`cut` delegation adds none. (If this count drifts,
-    // a cut call routes its name in a way the grep can't see.)
+    val rawSites = texts.map("Scratch\\.cut\\(".r.findAllIn(_).length).sum
+    val literalSites = texts.map(site.findAllMatchIn(_).length).sum
+    // GenrePipeline.scala's parameterized Scratch.cut(df.sparkSession, n);
+    // Scratch.scala's own definition is no call. (If this count drifts, a
+    // cut call routes its name in a way the grep can't see.)
     val knownParameterized = 1
     assert(rawSites == literalSites + knownParameterized,
-      s"raw Scratch.cut[Eager]( occurrences ($rawSites) != literal sites " +
+      s"raw Scratch.cut( occurrences ($rawSites) != literal sites " +
         s"($literalSites) + known parameterized ($knownParameterized) — " +
         "a cut call site routes its name in a way this grep can't see " +
         "(a genuinely new wrapper, or a name interpolation the `site` " +

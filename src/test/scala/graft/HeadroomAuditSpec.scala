@@ -75,19 +75,14 @@ class HeadroomAuditSpec extends SparkSpec {
     * operator machinery is exactly where the next wide-integer product
     * will be written, and the per-query block scan above never sees
     * it). Keyed `file:<basename>`; a flagged file needs a
-    * `file:<basename>` row in HeadroomAudit.entries. The two audit
-    * registries are excluded BY NAME: their content is quoted bounds
-    * and pins of already-audited queries (HeadroomAudit's own pin
-    * strings would flag themselves), not executable arithmetic.
+    * `file:<basename>` row in HeadroomAudit.entries.
     */
   private lazy val nonQueryFiles: Map[String, String] = {
     val root = java.nio.file.Paths.get("src/main/scala/graft")
-    val excluded = Set("HeadroomAudit.scala", "DecisionAudit.scala")
     val files = java.nio.file.Files.walk(root).toArray.toSeq
       .map(_.asInstanceOf[java.nio.file.Path])
       .filter(p => p.toString.endsWith(".scala")
-        && !p.toString.contains("/queries/")
-        && !excluded(p.getFileName.toString))
+        && !p.toString.contains("/queries/"))
     assert(files.size > 30, s"package walk looks broken: ${files.size} files")
     files.map { p =>
       s"file:${p.getFileName}" ->

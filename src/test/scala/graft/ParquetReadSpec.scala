@@ -9,8 +9,7 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{AnalysisException, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
 
@@ -36,23 +35,6 @@ class ParquetReadSpec extends SparkSpec {
     "documents" -> Tables.documents, "embeddings" -> Tables.embeddings)
 
   private def tmp(name: String) = Files.createTempDirectory(name).toString
-
-  /** Spark jobs launched while `body` runs. */
-  private def jobs(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    GraftBridge.drainListeners(spark)
-    spark.sparkContext.addSparkListener(counter)
-    try {
-      body
-      GraftBridge.drainListeners(spark)
-    } finally spark.sparkContext.removeSparkListener(counter)
-    n.get
-  }
 
   private def assertSameSchema(path: String): Unit = {
     val inferred = spark.read.parquet(path).schema
@@ -222,5 +204,114 @@ class ParquetReadSpec extends SparkSpec {
     for ((f, snippet) <- readAllowed)
       assert(texts.exists { case (p, t) => p.endsWith(f) && t.contains(snippet) },
         s"stale allowlist entry $f: $snippet")
+  }
+
+  /** A plain overwrite parquet write, the one `Sources.checkpoint` makes,
+    * as `.write.mode("overwrite").parquet(` across line breaks or as
+    * `Sources.writeParquet(`; the path is the call's last argument.
+    */
+  private val plainWrite =
+    """\.write\s*\.mode\("overwrite"\)\s*\.parquet\(|\bwriteParquet\(""".r
+  private val pairAllowed = Seq(
+    // the cut memo writes once per run and reads on every build
+    "graft/Scratch.scala" -> "written.once(s, name)(Sources.writeParquet(df, p))",
+    // Bench re-reads the word counts inside each timed trainer span
+    "graft/Bench.scala" -> """.write.mode("overwrite").parquet(wcPath)""")
+
+  /** The last argument of the call whose `(` ends just before `from`. */
+  private def lastArgument(text: String, from: Int): String = {
+    var (i, depth, start) = (from, 0, from)
+    while (i < text.length && !(depth == 0 && text(i) == ')')) {
+      text(i) match {
+        case '(' => depth += 1
+        case ')' => depth -= 1
+        case ',' if depth == 0 => start = i + 1
+        case _ =>
+      }
+      i += 1
+    }
+    text.substring(start, i).trim
+  }
+
+  /** The rest of the brace block holding `from`: its definition's body. */
+  private def restOfBlock(text: String, from: Int): String = {
+    var (i, depth) = (from, 0)
+    while (i < text.length && depth >= 0) {
+      if (text(i) == '{') depth += 1 else if (text(i) == '}') depth -= 1
+      i += 1
+    }
+    text.substring(from, i)
+  }
+
+  /** Hand-written checkpoints in `text`: a plain write of path X read back
+    * by `Sources.parquet(_, X)` later in the same block, as
+    * `file:line: write line`. Writes in comments are skipped.
+    */
+  private def handCheckpoints(file: String, text: String,
+      allow: Seq[(String, String)] = pairAllowed): Seq[String] =
+    plainWrite.findAllMatchIn(text).toSeq.flatMap { m =>
+      val lineNo = text.substring(0, m.start).count(_ == '\n') + 1
+      val line = text.linesIterator.drop(lineNo - 1).next()
+      val lineStart = text.lastIndexOf('\n', m.start) + 1
+      val before = text.substring(lineStart, m.start).trim
+      val comment = before.startsWith("*") || before.contains("//")
+      val path = lastArgument(text, m.end)
+      val readBack = ("""Sources\.parquet\(\s*[\w.]+\s*,\s*""" +
+        java.util.regex.Pattern.quote(path) + """\s*\)""").r
+      val allowed = allow.exists { case (f, snippet) =>
+        file.endsWith(f) && line.contains(snippet)
+      }
+      if (comment || allowed || path.isEmpty ||
+          readBack.findFirstIn(restOfBlock(text, m.end)).isEmpty) Nil
+      else Seq(s"$file:$lineNo: ${line.trim}")
+    }
+
+  test("no write-then-read of one path in src/main outside Sources") {
+    // planted controls: each hand-written pair shape is flagged ...
+    for (planted <- Seq(
+        "{ df.write.mode(\"overwrite\").parquet(p)\n  Sources.parquet(s, p) }",
+        "{ val a = df\n    .write\n    .mode(\"overwrite\")\n" +
+          "    .parquet(s\"$dir/a\")\n  f(Sources.parquet(spark, s\"$dir/a\")) }",
+        "{ Sources.writeParquet(df.filter(col(\"x\") > 1), out)\n" +
+          "  Sources.parquet(s, out).count() }"))
+      assert(handCheckpoints("Planted.scala", planted).nonEmpty, planted)
+    // ... and a write read back elsewhere, under another path, with
+    // another write mode or layout, or named in a comment, is not
+    for (fine <- Seq(
+        "{ df.write.mode(\"overwrite\").parquet(p); p }\ndef r = Sources.parquet(s, p)",
+        "{ df.write.mode(\"overwrite\").parquet(p)\n  Sources.parquet(s, q) }",
+        "{ df.write.mode(\"append\").parquet(p)\n  Sources.parquet(s, p) }",
+        "{ df.write.mode(\"overwrite\").partitionBy(\"k\").parquet(p)\n" +
+          "  Sources.parquet(s, p) }",
+        "{ // df.write.mode(\"overwrite\").parquet(p)\n  Sources.parquet(s, p) }"))
+      assert(handCheckpoints("Planted.scala", fine).isEmpty, fine)
+
+    val root = Paths.get("src/main/scala")
+    val walk = Files.walk(root)
+    val texts =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => p.toString -> Files.readString(p)).toSeq
+      finally walk.close()
+    def text(f: String) = texts.collectFirst { case (p, t) if p.endsWith(f) => t }
+      .getOrElse(fail(s"no source file $f"))
+    // writes whose point is the write itself: the guard sees each write
+    // and none is read back as a checkpoint
+    for (f <- Seq("graft/operators/SnapshotStore.scala",
+        "graft/operators/Compaction.scala", "graft/similarity/IvfIndex.scala",
+        "graft/similarity/PqIndex.scala", "graft/queries/StreamingQueries.scala")) {
+      assert(plainWrite.findFirstIn(text(f)).nonEmpty, s"$f: no write seen")
+      assert(handCheckpoints(f, text(f)).isEmpty, f)
+    }
+
+    val offenders = texts.filterNot(_._1.endsWith("graft/sources/Sources.scala"))
+      .flatMap { case (f, t) => handCheckpoints(f, t) }
+    assert(offenders.isEmpty, "writes read back as a checkpoint outside " +
+      "Sources (call Sources.checkpoint, or Scratch.cut for a frame shared " +
+      "across queries):\n" + offenders.mkString("\n"))
+    // the allowlist names live sites only: each entry is a pair the guard
+    // flags once the entry is taken out
+    for (entry @ (f, snippet) <- pairAllowed)
+      assert(handCheckpoints(f, text(f), pairAllowed.filterNot(_ == entry))
+        .exists(_.contains(snippet)), s"stale allowlist entry $f: $snippet")
   }
 }

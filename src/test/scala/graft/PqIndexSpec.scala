@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 import graft.similarity.PqIndex
 
@@ -61,22 +59,8 @@ class PqIndexSpec extends SparkSpec {
     // jobs at m=4, 344 at m=16 on this input).
     val emb = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    def jobs(m: Int): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger
-      val counter = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = {
-          n.incrementAndGet(); ()
-        }
-      }
-      GraftBridge.drainListeners(spark)
-      spark.sparkContext.addSparkListener(counter)
-      try {
-        PqIndex.build(emb, m = m, k = 32)
-        GraftBridge.drainListeners(spark)
-      } finally spark.sparkContext.removeSparkListener(counter)
-      n.get
-    }
-    val (m4, m16) = (jobs(4), jobs(16))
+    def build(m: Int): Int = jobs(PqIndex.build(emb, m = m, k = 32))
+    val (m4, m16) = (build(4), build(16))
     assert(m4 == m16, s"job count grew with m: m=4 $m4, m=16 $m16")
     assert(m16 == 4, s"build launched $m16 jobs")
   }

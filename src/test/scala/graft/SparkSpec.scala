@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,11 +22,44 @@ object SparkSpec {
   }
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /** What Spark ran while a body ran: jobs started and shuffle bytes
+    * written by the stages that completed.
+    */
+  final case class Ran(jobs: Int, shuffleWriteBytes: Long)
+
+  /** Runs `body` under one listener and returns its value with what Spark
+    * ran meanwhile. The listener bus is drained before and after, so the
+    * count holds exactly the events of the jobs `body` started.
+    */
+  def ran[T](spark: SparkSession)(body: => T): (T, Ran) = {
+    val jobs = new AtomicInteger
+    val shuffled = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        shuffled.addAndGet(
+          e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten); ()
+      }
+    }
+    GraftBridge.drainListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val value = body
+      GraftBridge.drainListeners(spark)
+      (value, Ran(jobs.get, shuffled.get))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
 
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir: String = SparkSpec.sfDir
+
+  /** Spark jobs launched while `body` runs. */
+  def jobs(body: => Any): Int = SparkSpec.ran(spark)(body)._2.jobs
 
   /** Runs `f` with session conf `key` set to `value` (unset for None),
     * then restores the session's previous setting.
